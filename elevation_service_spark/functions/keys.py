@@ -3,7 +3,9 @@ whole-stage codegen — never a Python UDF; SURVEY.md §2 op-5).
 
 skadi_key_col mirrors elevation-service/tileset.js § getFilePath:
 floor first, hemisphere letter from the FLOORED value, abs, zero-pad 2/3
-(so lat=-0.0001 -> "S01...", matching the reference).
+(so lat=-0.0001 -> "S01...", matching the reference).  A floor past the
+int range (±inf, |x| >= 2^31) gives a NULL key, never an ANSI
+CAST_OVERFLOW; such points are OUT_OF_BOUNDS downstream.
 """
 
 from __future__ import annotations
@@ -13,8 +15,9 @@ from pyspark.sql import functions as F
 
 
 def skadi_key_col(lat: Column, lon: Column) -> Column:
-    flat = F.floor(lat).cast("int")
-    flon = F.floor(lon).cast("int")
+    # abs() on the long: abs(-2^31) would overflow an int
+    flat = F.floor(lat).try_cast("int").cast("long")
+    flon = F.floor(lon).try_cast("int").cast("long")
     return F.concat(
         F.when(flat < 0, F.lit("S")).otherwise(F.lit("N")),
         F.lpad(F.abs(flat).cast("string"), 2, "0"),

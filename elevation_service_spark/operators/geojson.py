@@ -28,11 +28,13 @@ from __future__ import annotations
 import json
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .lookup import enrich_points, tiles_bytes
+from .lookup import _lookup_batch, _tile_map, enrich_points, tiles_bytes
 
 _GEOM_TYPES = {"Point", "MultiPoint", "LineString", "MultiLineString",
                "Polygon", "MultiPolygon", "GeometryCollection", "Feature",
@@ -93,6 +95,66 @@ def canonical_json(obj) -> str:
     return json.dumps(obj, separators=(",", ":"), sort_keys=True)
 
 
+def _parse_doc(raw: str | None, max_doc_bytes: int) -> tuple:
+    """The one document parse: ``(obj, positions, None)`` for a walkable
+    GeoJSON document, else ``(None, None, status)`` with status TOO_LARGE
+    (never parsed), INVALID_JSON or NOT_GEOJSON.  Nesting past Python's
+    recursion limit is statused like any other bad input."""
+    if raw is not None and len(raw.encode("utf-8")) > max_doc_bytes:
+        return None, None, "TOO_LARGE"
+    try:
+        obj = json.loads(raw)
+    except (ValueError, TypeError, RecursionError):
+        return None, None, "INVALID_JSON"
+    try:
+        return obj, validated_positions(obj), None
+    except (ValueError, TypeError, KeyError, RecursionError):
+        return None, None, "NOT_GEOJSON"
+
+
+def _coords(values: list) -> np.ndarray:
+    """GeoJSON numbers -> float64.  An integer beyond the double range
+    reads as +-inf, as json reads the literal 1e400: its position is out
+    of bounds and stays unenriched."""
+    try:
+        return np.array(values, dtype=np.float64)
+    except OverflowError:
+        return np.array([v if abs(v) < 1e308 else np.inf if v > 0 else -np.inf
+                         for v in values], dtype=np.float64)
+
+
+def _parse_batch(raws, max_doc_bytes: int):
+    """_parse_doc over a batch.  Returns the per-document parses, each
+    document's position count, and all positions in document order as
+    provider-order (lat, lon) vectors — GeoJSON order is [lon, lat] (op 4)."""
+    parsed = [_parse_doc(raw, max_doc_bytes) for raw in raws]
+    positions = [pos for _, ps, _ in parsed for pos in ps or ()]
+    counts = np.array([len(ps or ()) for _, ps, _ in parsed], dtype=np.int64)
+    return (parsed, counts, _coords([p[1] for p in positions]),
+            _coords([p[0] for p in positions]))
+
+
+def _write_back(doc: tuple, elevs) -> tuple:
+    """Write each number of ``elevs`` back as its position's coords[2]
+    (a NULL / NaN elevation leaves the position as it was).  Returns the
+    output row (geojson_out, n_positions, n_enriched, status)."""
+    obj, positions, status = doc
+    if status is not None:
+        return None, 0, 0, status
+    n_enr = 0
+    for pos, ele in zip(positions, elevs):
+        if ele is not None and ele == ele:  # not NaN
+            pos[2:3] = [float(ele)]
+            n_enr += 1
+    try:
+        out = canonical_json(obj)
+    except RecursionError:  # nested within a frame or two of the limit
+        return None, 0, 0, "NOT_GEOJSON"
+    n_pos = len(positions)
+    return (out, n_pos, n_enr,
+            "EMPTY" if n_pos == 0 else "OK" if n_enr == n_pos else "PARTIAL")
+
+
 _FLAT_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
     T.StructField("pos_idx", T.IntegerType(), False),
@@ -109,31 +171,19 @@ def flatten_geojson(docs: DataFrame, url_col: str = "url",
     here; they are re-detected (and statused) by reassembly, so the
     flatten stays a pure generator.  The size cap is a JVM-side filter —
     oversize payloads never cross the Arrow boundary."""
-    cols = (url_col, geojson_col)
-    from pyspark.sql import functions as F
     docs = docs.filter(F.octet_length(F.col(geojson_col)) <= max_doc_bytes)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            urls, idxs, lats, lons = [], [], [], []
-            for url, raw in zip(pdf[url_col], pdf[geojson_col]):
-                try:
-                    obj = json.loads(raw)
-                    positions = validated_positions(obj)
-                except (ValueError, TypeError, KeyError):
-                    continue
-                for i, pos in enumerate(positions):
-                    urls.append(url)
-                    idxs.append(i)
-                    # GeoJSON order [lon, lat]; provider order [lat, lon] (op 4)
-                    lons.append(float(pos[0]))
-                    lats.append(float(pos[1]))
-            yield pd.DataFrame({"url": pd.Series(urls, dtype=object),
-                                "pos_idx": pd.Series(idxs, dtype="int32"),
-                                "lat": pd.Series(lats, dtype="float64"),
-                                "lon": pd.Series(lons, dtype="float64")})
+            _, counts, lat, lon = _parse_batch(pdf[geojson_col], max_doc_bytes)
+            starts = np.repeat(np.cumsum(counts) - counts, counts)
+            yield pd.DataFrame({
+                "url": pd.Series(np.repeat(pdf[url_col].to_numpy(dtype=object), counts),
+                                 dtype=object),
+                "pos_idx": pd.Series(np.arange(len(lat)) - starts, dtype="int32"),
+                "lat": lat, "lon": lon})
 
-    return docs.select(*cols).mapInPandas(gen, _FLAT_SCHEMA)
+    return docs.select(url_col, geojson_col).mapInPandas(gen, _FLAT_SCHEMA)
 
 
 _DOC_OUT_SCHEMA = T.StructType([
@@ -143,6 +193,19 @@ _DOC_OUT_SCHEMA = T.StructType([
     T.StructField("n_enriched", T.IntegerType(), False),
     T.StructField("status", T.StringType(), False),
 ])
+
+
+def _doc_frame(urls, parsed: list, elevs) -> pd.DataFrame:
+    """The _DOC_OUT_SCHEMA batch: one _write_back row per document."""
+    rows = [_write_back(doc, e) for doc, e in zip(parsed, elevs)]
+    out, n_pos, n_enr, status = (list(c) for c in zip(*rows)) if rows else [[]] * 4
+    return pd.DataFrame({
+        "url": pd.Series(list(urls), dtype=object),
+        "geojson_out": pd.Series(out, dtype=object),
+        "n_positions": pd.Series(n_pos, dtype="int32"),
+        "n_enriched": pd.Series(n_enr, dtype="int32"),
+        "status": pd.Series(status, dtype=object),
+    })
 
 
 def reassemble_geojson(docs: DataFrame, enriched: DataFrame,
@@ -158,7 +221,6 @@ def reassemble_geojson(docs: DataFrame, enriched: DataFrame,
     aggregation, hash-joined back to the documents, and the JSON rewrite
     runs as ONE batched mapInPandas — NOT a per-url cogroup (one Arrow
     batch per tiny group is ~30x slower at millions of docs)."""
-    from pyspark.sql import functions as F
     agg = (enriched.groupBy("url")
            .agg(F.sort_array(F.collect_list(F.struct("pos_idx", "elevation")))
                 .alias("_elevs")))
@@ -167,56 +229,12 @@ def reassemble_geojson(docs: DataFrame, enriched: DataFrame,
 
     def gen(batches):
         for pdf in batches:
-            out = {"url": [], "geojson_out": [], "n_positions": [],
-                   "n_enriched": [], "status": []}
-            for url, raw, elev_rows in zip(pdf["url"], pdf[geojson_col], pdf["_elevs"]):
-                elevs = ([e["elevation"] for e in elev_rows]
-                         if elev_rows is not None else [])
-                geojson_out, n_pos, n_enr, status = None, 0, 0, "OK"
-                if raw is not None and len(raw.encode("utf-8")) > max_doc_bytes:
-                    # MAX_POST_SIZE parity: statused without parsing
-                    out["url"].append(url)
-                    out["geojson_out"].append(None)
-                    out["n_positions"].append(0)
-                    out["n_enriched"].append(0)
-                    out["status"].append("TOO_LARGE")
-                    continue
-                try:
-                    obj = json.loads(raw)
-                except (ValueError, TypeError):
-                    status = "INVALID_JSON"
-                    obj = None
-                if obj is not None:
-                    try:
-                        positions = validated_positions(obj)
-                    except (ValueError, TypeError, KeyError):
-                        status = "NOT_GEOJSON"
-                        positions = None
-                    if positions is not None:
-                        n_pos = len(positions)
-                        for i, pos in enumerate(positions):
-                            ele = elevs[i] if i < len(elevs) else None
-                            if ele is not None and ele == ele:  # not NaN
-                                if len(pos) >= 3:
-                                    pos[2] = float(ele)
-                                else:
-                                    pos.append(float(ele))
-                                n_enr += 1
-                        geojson_out = canonical_json(obj)
-                        status = ("EMPTY" if n_pos == 0
-                                  else "OK" if n_enr == n_pos else "PARTIAL")
-                out["url"].append(url)
-                out["geojson_out"].append(geojson_out)
-                out["n_positions"].append(n_pos)
-                out["n_enriched"].append(n_enr)
-                out["status"].append(status)
-            yield pd.DataFrame({
-                "url": pd.Series(out["url"], dtype=object),
-                "geojson_out": pd.Series(out["geojson_out"], dtype=object),
-                "n_positions": pd.Series(out["n_positions"], dtype="int32"),
-                "n_enriched": pd.Series(out["n_enriched"], dtype="int32"),
-                "status": pd.Series(out["status"], dtype=object),
-            })
+            # the fused pass's call path, so a document nested right at the
+            # recursion limit gets the same status on both
+            parsed = _parse_batch(pdf[geojson_col], max_doc_bytes)[0]
+            elevs = [[e["elevation"] for e in rows] if rows is not None else []
+                     for rows in pdf["_elevs"]]
+            yield _doc_frame(pdf["url"], parsed, elevs)
 
     return joined.mapInPandas(gen, _DOC_OUT_SCHEMA)
 
@@ -228,13 +246,13 @@ def add_elevation_docs_fused(docs: DataFrame, tiles: DataFrame, *,
                              broadcast_bytes_threshold: int = 512 << 20,
                              _tiles_bytes: int | None = None) -> DataFrame:
     """Single-pass POST /geojson: ONE mapInPandas walks, enriches (broadcast
-    tile map + the same batch-vectorized kernel as enrich_points'
-    broadcast strategy), and rewrites each document in place — one JSON
+    tile map + the same batch lookup as enrich_points' broadcast
+    strategy), and rewrites each document in place — one JSON
     parse + one dump per doc, ZERO shuffle, and the document string
     crosses the Arrow boundary once each way (the flatten→enrich→reassemble
     pipeline parses twice and ships the doc text in twice).  Output rows,
     statuses, and elevation values are identical to add_elevation_docs
-    (same walk, same kernel, same grid cache).
+    (same parse, same kernel, same write-back).
 
     The needed-tile working set is only knowable by PARSING the docs (the
     very pass fusion eliminates), so this path broadcasts the WHOLE tile
@@ -243,11 +261,6 @@ def add_elevation_docs_fused(docs: DataFrame, tiles: DataFrame, *,
     go through add_elevation_docs, which probes the size and falls back to
     the flatten→enrich→reassemble pipeline (which CAN left-semi-prune
     tiles) when the table is too big; a direct oversize call raises."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from .lookup import _enrich_one_tile_codes
-
     sz = tiles_bytes(tiles) if _tiles_bytes is None else _tiles_bytes
     if sz > broadcast_bytes_threshold:
         raise ValueError(
@@ -255,83 +268,14 @@ def add_elevation_docs_fused(docs: DataFrame, tiles: DataFrame, *,
             f"{broadcast_bytes_threshold}; the fused single-pass form cannot "
             "prune tiles — use add_elevation_docs(strategy='auto'/'broadcast'/"
             "'cogroup'), which prunes to the docs' tile working set")
-    spark = docs.sparkSession
-    rows = tiles.select("tile_key", "sw_lat", "sw_lon", "encoding", "data").collect()
-    bc = spark.sparkContext.broadcast(
-        {(r["sw_lat"] + 90) * 512 + (r["sw_lon"] + 180):
-         (r["sw_lat"], r["sw_lon"], r["encoding"], bytes(r["data"]))
-         for r in rows})
+    bc = docs.sparkSession.sparkContext.broadcast(_tile_map(tiles))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tile_map = bc.value
         for pdf in batches:
-            # pass 1: parse + validate every doc, flatten the batch's
-            # positions into one vector for the kernel
-            parsed: list = []  # (url, obj|None, positions|None, status, start, n)
-            lats: list[float] = []
-            lons: list[float] = []
-            for url, raw in zip(pdf[url_col], pdf[geojson_col]):
-                if raw is not None and len(raw.encode("utf-8")) > max_doc_bytes:
-                    parsed.append((url, None, None, "TOO_LARGE", 0, 0))
-                    continue
-                try:
-                    obj = json.loads(raw)
-                except (ValueError, TypeError):
-                    parsed.append((url, None, None, "INVALID_JSON", 0, 0))
-                    continue
-                try:
-                    positions = validated_positions(obj)
-                except (ValueError, TypeError, KeyError):
-                    parsed.append((url, None, None, "NOT_GEOJSON", 0, 0))
-                    continue
-                parsed.append((url, obj, positions, None, len(lats), len(positions)))
-                for pos in positions:
-                    lons.append(float(pos[0]))
-                    lats.append(float(pos[1]))
-            # pass 2: enrich the whole batch, grouped by tile id exactly
-            # like _enrich_broadcast (non-finite coords get sentinel -1 ->
-            # no tile; the kernel statuses them OUT_OF_BOUNDS regardless)
-            lat = np.asarray(lats, dtype=np.float64)
-            lon = np.asarray(lons, dtype=np.float64)
-            elev = np.full(len(lat), np.nan)
-            if len(lat):
-                finite = np.isfinite(lat) & np.isfinite(lon)
-                tid = np.full(len(lat), -1, dtype=np.int64)
-                tid[finite] = ((np.floor(lat[finite]).astype(np.int64) + 90) * 512
-                               + np.floor(lon[finite]).astype(np.int64) + 180)
-                for key, idx in pd.Series(tid).groupby(tid, sort=False).indices.items():
-                    e, _c = _enrich_one_tile_codes(lat[idx], lon[idx],
-                                                   tile_map.get(key), interpolation)
-                    elev[idx] = e
-            # pass 3: write coords[2] back and serialize once
-            out = {"url": [], "geojson_out": [], "n_positions": [],
-                   "n_enriched": [], "status": []}
-            for url, obj, positions, status, start, n_pos in parsed:
-                geojson_out, n_enr = None, 0
-                if status is None:
-                    for i, pos in enumerate(positions):
-                        ele = elev[start + i]
-                        if ele == ele:  # not NaN
-                            if len(pos) >= 3:
-                                pos[2] = float(ele)
-                            else:
-                                pos.append(float(ele))
-                            n_enr += 1
-                    geojson_out = canonical_json(obj)
-                    status = ("EMPTY" if n_pos == 0
-                              else "OK" if n_enr == n_pos else "PARTIAL")
-                out["url"].append(url)
-                out["geojson_out"].append(geojson_out)
-                out["n_positions"].append(n_pos)
-                out["n_enriched"].append(n_enr)
-                out["status"].append(status)
-            yield pd.DataFrame({
-                "url": pd.Series(out["url"], dtype=object),
-                "geojson_out": pd.Series(out["geojson_out"], dtype=object),
-                "n_positions": pd.Series(out["n_positions"], dtype="int32"),
-                "n_enriched": pd.Series(out["n_enriched"], dtype="int32"),
-                "status": pd.Series(out["status"], dtype=object),
-            })
+            parsed, counts, lat, lon = _parse_batch(pdf[geojson_col], max_doc_bytes)
+            elev, _ = _lookup_batch(tile_map, lat, lon, interpolation)
+            yield _doc_frame(pdf["url"], parsed, np.split(elev, np.cumsum(counts)[:-1]))
 
     # Map-only: parallelism comes from the input scan, as at real scale.
     # Deliberately NO local repartition for thin fixture inputs — spreading

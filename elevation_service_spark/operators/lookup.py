@@ -27,21 +27,36 @@ Two physical strategies, chosen for the 100 TB case:
 from __future__ import annotations
 
 import gzip
+import os
 from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import kernels
 from ..functions.keys import skadi_key_col
+from .spread import few_input_splits
 
 STATUS_OK = "OK"
 STATUS_OUT_OF_BOUNDS = "OUT_OF_BOUNDS"
 STATUS_TILE_MISSING = "TILE_MISSING"
 STATUS_BAD_TILE = "BAD_TILE"
+
+
+def _grid_cache_budget() -> int:
+    """Per-worker decoded-grid budget: a quarter of physical RAM split over
+    one Python worker per core (the rest is the JVMs' and the batches'),
+    capped at 2 GiB — about 1 GB per worker on a 16 GB, 4-core host, far
+    above the ~140 MB a five-tile working set decodes to."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return 2 << 30
+    return min(2 << 30, ram // (4 * (os.cpu_count() or 1)))
+
 
 # per-worker decoded-grid LRU (TILE_SET_CACHE parity).  Grids are cached
 # already converted to float64 — the kernel's dominant cost is otherwise an
@@ -49,8 +64,7 @@ STATUS_BAD_TILE = "BAD_TILE"
 # 3601 tile; measured 10x the lerp itself).  Eviction is by byte budget,
 # not entry count, since float64 grids are 4x the wire size.
 _GRID_CACHE: OrderedDict = OrderedDict()
-_GRID_CACHE_MAX_BYTES = int(__import__("os").environ.get(
-    "SPARK_GRAFT_GRID_CACHE_BYTES", str(2 << 30)))
+_GRID_CACHE_MAX_BYTES = _grid_cache_budget()
 # per-worker counters; surfaced to the driver through accumulators when the
 # caller passes cache_metrics (grid_cache_accumulators) — the locality claim
 # (cache -> join-locality parity) is then measured per job, not asserted
@@ -104,22 +118,33 @@ def _cached_grid(tile_key: str, encoding: str, data: bytes) -> np.ndarray:
 
 
 # numeric status codes keep the Python->JVM Arrow traffic to one tinyint per
-# row; the string column is materialized JVM-side (codegen CASE)
+# row; the string column is materialized JVM-side (_status_col)
 CODE_OK, CODE_OUT_OF_BOUNDS, CODE_TILE_MISSING, CODE_BAD_TILE = 0, 1, 2, 3
 STATUS_BY_CODE = [STATUS_OK, STATUS_OUT_OF_BOUNDS, STATUS_TILE_MISSING, STATUS_BAD_TILE]
+
+
+def _status_col(code: Column) -> Column:
+    """Status string of an int status-code column."""
+    return F.element_at(F.array(*[F.lit(s) for s in STATUS_BY_CODE]),
+                        code.cast("int") + 1)
+
+
+def _in_range(lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
+    """Valid-coordinate mask (NaN is never valid)."""
+    return (lat >= -90.0) & (lat <= 90.0) & (lon >= -180.0) & (lon <= 180.0)
 
 
 def _enrich_one_tile_codes(lat: np.ndarray, lon: np.ndarray,
                            tile: tuple | None, interpolation: str
                            ) -> tuple[np.ndarray, np.ndarray]:
     """(elev float64 w/ NaN, status code int8 array) for points of ONE tile.
-    tile = (sw_lat, sw_lon, encoding, data) or None if missing."""
-    n = len(lat)
-    elev = np.full(n, np.nan)
-    code = np.full(n, CODE_OK, dtype=np.int8)
-    invalid = ~((lat >= -90.0) & (lat <= 90.0) & (lon >= -180.0) & (lon <= 180.0))
-    code[invalid] = CODE_OUT_OF_BOUNDS
-    ok_mask = ~invalid
+    tile = (sw_lat, sw_lon, encoding, data) or None if missing.  A group
+    with no in-range point never decodes its tile."""
+    elev = np.full(len(lat), np.nan)
+    ok_mask = _in_range(lat, lon)
+    code = np.where(ok_mask, CODE_OK, CODE_OUT_OF_BOUNDS).astype(np.int8)
+    if not ok_mask.any():
+        return elev, code
     if tile is None:
         code[ok_mask] = CODE_TILE_MISSING
         return elev, code
@@ -129,14 +154,48 @@ def _enrich_one_tile_codes(lat: np.ndarray, lon: np.ndarray,
     except Exception:
         code[ok_mask] = CODE_BAD_TILE
         return elev, code
-    if ok_mask.any():
-        e, inb = kernels.lookup_elevation(grid, sw_lat, sw_lon,
-                                          lat[ok_mask], lon[ok_mask],
-                                          interpolation=interpolation)
-        idx = np.nonzero(ok_mask)[0]
-        elev[idx] = e
-        code[idx[~inb]] = CODE_OUT_OF_BOUNDS
-        elev[idx[~inb]] = np.nan
+    e, inb = kernels.lookup_elevation(grid, sw_lat, sw_lon,
+                                      lat[ok_mask], lon[ok_mask],
+                                      interpolation=interpolation)
+    idx = np.nonzero(ok_mask)[0]
+    elev[idx] = e
+    code[idx[~inb]] = CODE_OUT_OF_BOUNDS
+    elev[idx[~inb]] = np.nan
+    return elev, code
+
+
+def _tile_ids(lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
+    """Packed int64 tile id (floor(lat)+90)*512 + (floor(lon)+180) of each
+    point; -1 (no tile) for NaN and out-of-range coordinates, so no value
+    is ever floored past the integer range."""
+    ok = _in_range(lat, lon)
+    tid = np.full(len(lat), -1, dtype=np.int64)
+    tid[ok] = ((np.floor(lat[ok]).astype(np.int64) + 90) * 512
+               + np.floor(lon[ok]).astype(np.int64) + 180)
+    return tid
+
+
+def _tile_map(tiles: DataFrame) -> dict:
+    """Collect a tile table into the broadcast lookup map: packed tile id
+    -> (sw_lat, sw_lon, encoding, data)."""
+    rows = tiles.select("sw_lat", "sw_lon", "encoding", "data").collect()
+    ids = _tile_ids(np.array([r["sw_lat"] for r in rows], dtype=np.float64),
+                    np.array([r["sw_lon"] for r in rows], dtype=np.float64))
+    return {int(t): (r["sw_lat"], r["sw_lon"], r["encoding"], bytes(r["data"]))
+            for t, r in zip(ids, rows)}
+
+
+def _lookup_batch(tile_map: dict, lat: np.ndarray, lon: np.ndarray,
+                  interpolation: str) -> tuple[np.ndarray, np.ndarray]:
+    """(elevation, status code) of a batch of points against a _tile_map:
+    the points are bucketed by tile id and each bucket runs the kernel
+    once.  NULL coordinates arrive as NaN and come back OUT_OF_BOUNDS."""
+    tid = _tile_ids(lat, lon)
+    elev = np.full(len(lat), np.nan)
+    code = np.empty(len(lat), dtype=np.int8)
+    for key, idx in pd.Series(tid).groupby(tid, sort=False).indices.items():
+        elev[idx], code[idx] = _enrich_one_tile_codes(
+            lat[idx], lon[idx], tile_map.get(key), interpolation)
     return elev, code
 
 
@@ -211,54 +270,36 @@ def enrich_points(points: DataFrame, tiles: DataFrame, *,
 
 _CHEAP_DECODE = ("hgt", "hgt.gz")
 
-def _few_input_splits(points: DataFrame, spark) -> bool:
-    """True when the points frame is a shuffle-free derivation of fewer
-    input files than cores — the case where the scan undersupplies
-    parallelism and a tile-key spread pays for itself.  Shared with the
-    r8 tokenize-spread helper (operators/spread.py — see there for the
-    metadata-only probe rules)."""
-    from .spread import few_input_splits
-    return few_input_splits(points, spark)
-
 
 def _enrich_broadcast(points: DataFrame, tiles: DataFrame,
                       interpolation: str, prune_tiles: bool = True,
                       cache_metrics: dict | None = None,
                       auto_partition: bool = False) -> DataFrame:
     spark = points.sparkSession
-    src = tiles
     if prune_tiles:
         # fetch only requested tiles (reference lazy-load parity) — costs one
         # extra pass over the points for the distinct keys; skip it when the
         # tile table is known-small (prune_tiles=False)
-        needed = points.select("tile_key").distinct()
-        src = tiles.join(needed, "tile_key", "left_semi")
-    rows = src.select("tile_key", "sw_lat", "sw_lon", "encoding", "data").collect()
-    if auto_partition and rows:
+        tiles = tiles.join(points.select("tile_key").distinct(), "tile_key", "left_semi")
+    tile_map = _tile_map(tiles)
+    if auto_partition and tile_map:
         # auto partition_by_key (enrich_points docstring): shuffle-spread
         # the points over tiles only when the decode bill is dominated by
         # expensive encodings AND the scan undersupplies parallelism
-        n_exp = sum(1 for r in rows if r["encoding"] not in _CHEAP_DECODE)
-        if 2 * n_exp > len(rows) and _few_input_splits(points, spark):
+        n_exp = sum(1 for t in tile_map.values() if t[2] not in _CHEAP_DECODE)
+        if 2 * n_exp > len(tile_map) and few_input_splits(points, spark):
             points = points.repartition(F.col("tile_key"))
-    # tiles keyed by packed int id (sw_lat+90)*360 + (sw_lon+180): an int32
-    # crosses the Arrow boundary per row instead of a string, and the
-    # per-batch groupby hashes int64s instead of strings
-    bc = spark.sparkContext.broadcast(
-        {(r["sw_lat"] + 90) * 512 + (r["sw_lon"] + 180):
-         (r["sw_lat"], r["sw_lon"], r["encoding"], bytes(r["data"]))
-         for r in rows})
+    bc = spark.sparkContext.broadcast(tile_map)
 
-    # scalar pandas_udf over exactly (tid, lat, lon): every other column of
-    # the points table stays JVM-side and never crosses the Arrow boundary;
+    # scalar pandas_udf over exactly (lat, lon): every other column of the
+    # points table stays JVM-side and never crosses the Arrow boundary;
     # the UDF returns one double + one tinyint per row.
     result_type = T.StructType([
         T.StructField("elevation", T.DoubleType(), True),
         T.StructField("code", T.ByteType(), False),
     ])
 
-    def lookup(tid: pd.Series, lat_s: pd.Series, lon_s: pd.Series) -> pd.DataFrame:
-        tile_map = bc.value
+    def lookup(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
         if cache_metrics:
             # resolve the module at call time: this nested fn is cloudpickled
             # BY VALUE, which snapshots referenced globals — a direct
@@ -267,46 +308,67 @@ def _enrich_broadcast(points: DataFrame, tiles: DataFrame,
             from elevation_service_spark.operators import lookup as _live
             stats = _live._GRID_CACHE_STATS
             stats0 = dict(stats)
-        n = len(tid)
-        lat = lat_s.to_numpy(dtype=np.float64)
-        lon = lon_s.to_numpy(dtype=np.float64)
-        elev = np.full(n, np.nan)
-        # null lat/lon -> null tid; pandas groupby DROPS NaN keys, so those
-        # rows would otherwise keep the OK preset with NULL elevation —
-        # preset them to OUT_OF_BOUNDS (op-14: invalid input, never OK)
-        code = np.where(tid.isna(), CODE_OUT_OF_BOUNDS, CODE_OK).astype(np.int8)
-        for key, idx in tid.groupby(tid, sort=False).indices.items():
-            e, c = _enrich_one_tile_codes(lat[idx], lon[idx],
-                                          tile_map.get(key), interpolation)
-            elev[idx] = e
-            code[idx] = c
+        elev, code = _lookup_batch(bc.value, lat.to_numpy(dtype=np.float64),
+                                   lon.to_numpy(dtype=np.float64), interpolation)
         if cache_metrics:
             for k, acc in cache_metrics.items():
                 acc.add(stats[k] - stats0[k])
         return pd.DataFrame({"elevation": elev, "code": code})
 
     lookup_udf = F.pandas_udf(lookup, returnType=result_type)
-    status_col = F.element_at(
-        F.array(*[F.lit(s) for s in STATUS_BY_CODE]),
-        F.col("_r.code").cast("int") + 1)
-    tid_col = ((F.floor(F.col("lat")).cast("int") + 90) * 512
-               + F.floor(F.col("lon")).cast("int") + 180)
     return (points
-            .withColumn("_r", lookup_udf(tid_col, F.col("lat"), F.col("lon")))
+            .withColumn("_r", lookup_udf(F.col("lat"), F.col("lon")))
             .withColumn("elevation", F.col("_r.elevation"))
-            .withColumn("status", status_col)
+            .withColumn("status", _status_col(F.col("_r.code")))
             .drop("_r"))
 
 
 def _adaptive_salt_map(points: DataFrame, target_points_per_group: int,
                        max_salt: int) -> dict[str, int]:
     """Per-tile salt factor proportional to the tile's point count — the
-    'tile-hotspot salting' of SURVEY.md §4.  Only hot tiles pay the cost of
-    replicating their tile row; cold tiles keep one group.  The per-tile
-    count aggregation is map-side-combined and tiny (one row per tile)."""
+    'tile-hotspot salting' of SURVEY.md §4 — for the HOT tiles only (k > 1;
+    every other tile keeps one group).  The per-tile count aggregation is
+    map-side-combined and tiny (one row per tile)."""
     counts = points.groupBy("tile_key").agg(F.count(F.lit(1)).alias("n")).collect()
-    return {r["tile_key"]: max(1, min(max_salt, -(-r["n"] // target_points_per_group)))
-            for r in counts}
+    salt = {r["tile_key"]: min(max_salt, -(-r["n"] // target_points_per_group))
+            for r in counts if r["tile_key"] is not None}
+    return {key: k for key, k in salt.items() if k > 1}
+
+
+def _cogroup_kernel(out_cols: list[str], risky: list[str], dedup: bool,
+                    interpolation: str):
+    """The cogroup kernel: one tile's points (plus its tile row, if any)
+    -> ``out_cols`` + (elevation, code).  ``risky`` columns arrive as
+    masked transport (see _enrich_cogroup) and are rebuilt exactly;
+    ``dedup`` computes each distinct coordinate once (join-back mode)."""
+
+    def fn(pts: pd.DataFrame, tls: pd.DataFrame) -> pd.DataFrame:
+        for c in risky:
+            # rebuild the exact nullable bigint from its masked
+            # transport: int64 values (never float64) + bool mask
+            pts[c] = pd.arrays.IntegerArray(
+                pts[c].to_numpy(dtype=np.int64),
+                pts[f"__null_{c}"].to_numpy(dtype=bool))
+        if dedup:
+            # NaNs dedup as equal in pandas, matching Spark's NaN-normalized
+            # join, so the join-back side stays unique
+            pts = pts.drop_duplicates(subset=["lat", "lon"])
+        out = pts[out_cols].copy()
+        tile = None
+        if len(tls):
+            r = tls.iloc[0]
+            tile = (int(r["sw_lat"]), int(r["sw_lon"]), r["encoding"], bytes(r["data"]))
+        elev, code = _enrich_one_tile_codes(out["lat"].to_numpy(dtype=np.float64),
+                                            out["lon"].to_numpy(dtype=np.float64),
+                                            tile, interpolation)
+        if len(out) and pd.isna(out["tile_key"].iloc[0]):
+            # the NULL tile_key group: OUT_OF_BOUNDS (op-14), never
+            # TILE_MISSING — as the join-back mode's coalesce
+            code[:] = CODE_OUT_OF_BOUNDS
+        out["elevation"], out["code"] = elev, code
+        return out
+
+    return fn
 
 
 #: column types that cross the Arrow boundary at fixed width — carrying
@@ -342,9 +404,9 @@ def _enrich_cogroup(points: DataFrame, tiles: DataFrame,
     function of those three columns, so the equi-join-back is exact;
     in-group pandas dedup makes the result side unique without an extra
     shuffle (Spark joins treat NaN = NaN and normalizes -0.0, matching the
-    kernel's numeric view).  Null-key rows (null coords -> null tile_key)
-    can't equi-join; they are exactly the OUT_OF_BOUNDS rows, restored by
-    the coalesce below — pinned in
+    kernel's numeric view).  Null-key rows (null or overflowing coords ->
+    null tile_key) can't equi-join; they are exactly the OUT_OF_BOUNDS
+    rows, restored by the coalesce below — pinned in
     test_null_coords_are_out_of_bounds_both_strategies."""
     dtypes = dict(points.dtypes)
     nullable = {f.name: f.nullable for f in points.schema.fields}
@@ -359,117 +421,46 @@ def _enrich_cogroup(points: DataFrame, tiles: DataFrame,
     risky = [c for c in extras if dtypes[c] == "bigint" and nullable.get(c)]
     carry = (len(extras) + len(risky) <= _CARRY_MAX_COLS
              and all(dtypes[c] in _ARROW_CHEAP_TYPES for c in extras))
-    keys = ["tile_key"]
-    if carry:
-        transport = [(F.coalesce(F.col(c), F.lit(0)).alias(c) if c in risky
-                      else F.col(c)) for c in extras]
-        transport += [F.col(c).isNull().alias(f"__null_{c}") for c in risky]
-        slim = points.select("tile_key", "lat", "lon", *transport)
-    else:
-        slim = points.select("tile_key", "lat", "lon")
+    if not carry:
+        extras = risky = []
+    out_cols = ["tile_key", "lat", "lon"] + extras
+    slim = points.select(
+        "tile_key", "lat", "lon",
+        *[F.coalesce(F.col(c), F.lit(0)).alias(c) if c in risky else F.col(c)
+          for c in extras],
+        *[F.col(c).isNull().alias(f"__null_{c}") for c in risky])
     tls = (tiles.join(points.select("tile_key").distinct(), "tile_key", "left_semi")
            .select("tile_key", "sw_lat", "sw_lon", "encoding", "data"))
+    keys = ["tile_key"]
+    k_col = None
     if salt_factor is None:
         # adaptive: split only hot tiles, k ~ point_count / target
-        salt_map = _adaptive_salt_map(points, target_points_per_group, max_salt)
-        if any(k > 1 for k in salt_map.values()):
-            entries = [x for key, k in salt_map.items() for x in (F.lit(key), F.lit(k))]
+        hot = _adaptive_salt_map(points, target_points_per_group, max_salt)
+        if hot:
+            entries = [F.lit(x) for kv in hot.items() for x in kv]
             k_col = F.coalesce(F.create_map(*entries)[F.col("tile_key")], F.lit(1))
-            slim = slim.withColumn("_salt", F.pmod(F.hash("lat", "lon"), k_col))
-            tls = tls.withColumn(
-                "_salt",
-                F.explode(F.sequence(F.lit(0), F.coalesce(
-                    F.create_map(*entries)[F.col("tile_key")], F.lit(1)) - 1)))
-            keys = ["tile_key", "_salt"]
     elif salt_factor > 1:
         # explicit uniform salting: split every tile k ways
-        slim = slim.withColumn("_salt", F.pmod(F.hash("lat", "lon"), F.lit(salt_factor)))
-        tls = tls.withColumn("_salt", F.explode(F.array([F.lit(i) for i in range(salt_factor)])))
+        k_col = F.lit(salt_factor)
+    if k_col is not None:
+        slim = slim.withColumn("_salt", F.pmod(F.hash("lat", "lon"), k_col))
+        tls = tls.withColumn("_salt", F.explode(F.sequence(F.lit(0), k_col - 1)))
         keys = ["tile_key", "_salt"]
 
-    if carry:
-        out_cols = ["tile_key", "lat", "lon"] + extras
-        carry_schema = (", ".join(f"`{c}` {dtypes[c]}" for c in out_cols)
-                        + ", elevation double, code tinyint")
-
-        def fn_carry(pts_pdf: pd.DataFrame, tls_pdf: pd.DataFrame) -> pd.DataFrame:
-            for c in risky:
-                # rebuild the exact nullable bigint from its masked
-                # transport: int64 values (never float64) + bool mask
-                pts_pdf[c] = pd.arrays.IntegerArray(
-                    pts_pdf[c].to_numpy(dtype=np.int64),
-                    pts_pdf[f"__null_{c}"].to_numpy(dtype=bool))
-            base = pts_pdf[out_cols]
-            n = len(base)
-            if n == 0:
-                elev = np.empty(0, dtype=np.float64)
-                code = np.empty(0, dtype=np.int8)
-            elif pd.isna(pts_pdf["tile_key"].iloc[0]):
-                # null coords -> null tile_key (one all-null group): op-14
-                # says OUT_OF_BOUNDS, never TILE_MISSING — mirrors the
-                # join-back path's coalesce and the broadcast preset
-                elev = np.full(n, np.nan)
-                code = np.full(n, CODE_OUT_OF_BOUNDS, dtype=np.int8)
-            else:
-                tile = None
-                if len(tls_pdf) > 0:
-                    r = tls_pdf.iloc[0]
-                    tile = (int(r["sw_lat"]), int(r["sw_lon"]),
-                            r["encoding"], bytes(r["data"]))
-                elev, code = _enrich_one_tile_codes(
-                    base["lat"].to_numpy(dtype=np.float64),
-                    base["lon"].to_numpy(dtype=np.float64),
-                    tile, interpolation)
-            out = base.copy()
-            out["elevation"] = elev
-            out["code"] = code
-            return out
-
-        res = (slim.groupBy(*keys).cogroup(tls.groupBy(*keys))
-               .applyInPandas(fn_carry, carry_schema))
-        status_col = F.element_at(
-            F.array(*[F.lit(s) for s in STATUS_BY_CODE]),
-            F.col("code").cast("int") + 1)
-        return res.select(*points.columns, F.col("elevation"),
-                          status_col.alias("status"))
-
-    result_schema = ("tile_key string, lat double, lon double, "
-                     "elevation double, code tinyint")
-
-    def fn(pts_pdf: pd.DataFrame, tls_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pts_pdf) == 0:
-            return pd.DataFrame({"tile_key": pd.Series([], dtype=object),
-                                 "lat": pd.Series([], dtype="float64"),
-                                 "lon": pd.Series([], dtype="float64"),
-                                 "elevation": pd.Series([], dtype="float64"),
-                                 "code": pd.Series([], dtype="int8")})
-        tile = None
-        if len(tls_pdf) > 0:
-            r = tls_pdf.iloc[0]
-            tile = (int(r["sw_lat"]), int(r["sw_lon"]), r["encoding"], bytes(r["data"]))
-        # the kernel is per-coordinate: compute each distinct coord ONCE
-        # (and keep the join-back side unique — NaNs dedup as equal in
-        # pandas, matching Spark's NaN-normalized join)
-        p = pts_pdf.drop_duplicates(subset=["lat", "lon"])
-        lat = p["lat"].to_numpy(dtype=np.float64)
-        lon = p["lon"].to_numpy(dtype=np.float64)
-        elev, code = _enrich_one_tile_codes(lat, lon, tile, interpolation)
-        return pd.DataFrame({"tile_key": p["tile_key"].to_numpy(dtype=object),
-                             "lat": lat, "lon": lon,
-                             "elevation": elev, "code": code})
-
+    schema = (", ".join(f"`{c}` {dtypes[c]}" for c in out_cols)
+              + ", elevation double, code tinyint")
     res = (slim.groupBy(*keys).cogroup(tls.groupBy(*keys))
-           .applyInPandas(fn, result_schema)
-           .withColumnRenamed("elevation", "__enrich_elev")
+           .applyInPandas(_cogroup_kernel(out_cols, risky, not carry, interpolation),
+                          schema))
+    if carry:
+        return res.select(*points.columns, F.col("elevation"),
+                          _status_col(F.col("code")).alias("status"))
+    res = (res.withColumnRenamed("elevation", "__enrich_elev")
            .withColumnRenamed("code", "__enrich_code"))
-    joined = points.join(res, ["tile_key", "lat", "lon"], "left")
-    status_col = F.when(
-        F.col("__enrich_code").isNull(), F.lit(STATUS_OUT_OF_BOUNDS)
-    ).otherwise(F.element_at(F.array(*[F.lit(s) for s in STATUS_BY_CODE]),
-                             F.col("__enrich_code").cast("int") + 1))
-    return joined.select(*points.columns,
-                         F.col("__enrich_elev").alias("elevation"),
-                         status_col.alias("status"))
+    code = F.coalesce(F.col("__enrich_code"), F.lit(CODE_OUT_OF_BOUNDS))
+    return (points.join(res, ["tile_key", "lat", "lon"], "left")
+            .select(*points.columns, F.col("__enrich_elev").alias("elevation"),
+                    _status_col(code).alias("status")))
 
 
 def missing_tiles(points: DataFrame, tiles: DataFrame) -> DataFrame:

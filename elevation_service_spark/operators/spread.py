@@ -10,7 +10,7 @@ while 31 cores idle (r8 measurement: the collocations tokenize stage ran
 are a dead end because the extra splits carry zero row groups).
 
 ``spread_few_splits`` applies the guarded fix the broadcast-enrich path
-has used since r3 (lookup._few_input_splits): round-robin repartition to
+has used since r3 (its auto partition_by_key): round-robin repartition to
 ``defaultParallelism`` ONLY when the frame is a shuffle-free derivation
 of fewer input files than cores.  The probe is metadata-only (optimized
 plan string + scan file list — never ``.rdd``, which executes upstream

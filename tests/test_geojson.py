@@ -212,16 +212,32 @@ def test_fused_strategy_byte_identical_to_pipeline(spark):
     """add_elevation_docs(strategy='fused') must produce byte-identical
     rows (geojson_out included) to the flatten->enrich->reassemble form on
     the full fixture set — all 9 geometry/container types PLUS the error
-    docs (invalid JSON, non-GeoJSON, malformed positions, empty)."""
+    docs (invalid JSON, non-GeoJSON, malformed positions, empty), and
+    inputs that used to fail the whole job: nesting past the recursion
+    limit, and coordinates beyond the double range (an integer literal
+    and the float literal 1e400); a JSON ``null`` document is NOT_GEOJSON
+    on both paths."""
+    nested = '{"type":"Point","coordinates":[11.5,57.5]}'
+    for _ in range(900):  # ~40 KB, far under the size cap
+        nested = '{"type":"GeometryCollection","geometries":[' + nested + ']}'
+    hard = [("nested", nested),
+            ("big_int", '{"type":"Point","coordinates":[1' + "0" * 400 + ',57.5]}'),
+            ("big_float", '{"type":"Point","coordinates":[1e400,57.5]}'),
+            ("json_null", "null")]
     rows = fixtures.geojson_docs()
     docs = spark.createDataFrame(
-        [(r["url"], r["geojson"]) for r in rows], ["url", "geojson"])
+        [(r["url"], r["geojson"]) for r in rows] + hard, ["url", "geojson"])
     tiles = fixture_tiles_df(spark)
     pipe = sorted(map(tuple, add_elevation_docs(
         docs, tiles, strategy="broadcast").collect()))
     fused = sorted(map(tuple, add_elevation_docs(
         docs, tiles, strategy="fused").collect()))
     assert pipe == fused
+    got = {r[0]: r for r in fused}
+    assert got["nested"][1:] == (None, 0, 0, "INVALID_JSON")
+    assert got["json_null"][1:] == (None, 0, 0, "NOT_GEOJSON")
+    for url in ("big_int", "big_float"):
+        assert got[url][2:] == (1, 0, "PARTIAL"), got[url]
     # the fused plan is map-only: no Exchange anywhere
     plan = (add_elevation_docs(docs, tiles, strategy="fused")
             ._jdf.queryExecution().executedPlan().toString())

@@ -19,7 +19,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
 def duck_con():
+    # DuckDB defaults to 80% of RAM; the tile_flowacc oracle's chained
+    # joins over the 3601² tile would then grow this process past 11 GB
+    # next to the Spark JVM. Bounded, it spills instead (same rows).
     con = duckdb.connect()
+    con.execute("SET memory_limit = '4GB'")
     for f in glob.glob(f"{SF_DIR}/*.parquet"):
         name = os.path.basename(f)[:-len(".parquet")]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{f}')")

@@ -217,15 +217,19 @@ def test_lsh_bucket_cap_bounds_pathological_bucket(spark):
 def test_null_coords_are_out_of_bounds_both_strategies(spark):
     """NULL lat/lon must surface as OUT_OF_BOUNDS with NULL elevation —
     never OK (broadcast path regression: pandas groupby drops NaN tile-id
-    keys, which used to leave the OK preset in place)."""
-    rows = [(0, 57.5, 11.5), (1, None, 11.5), (2, 57.5, None), (3, None, None)]
+    keys, which used to leave the OK preset in place).  So must ±inf and
+    coordinates whose floor overflows an int: they used to fail the whole
+    job with an ANSI CAST_OVERFLOW in the tile-key expression."""
+    inf = float("inf")
+    rows = [(0, 57.5, 11.5), (1, None, 11.5), (2, 57.5, None), (3, None, None),
+            (4, inf, 11.5), (5, 57.5, -inf), (6, 1e10, 11.5), (7, 57.5, -1e10)]
     pts = spark.createDataFrame(rows, "pid int, lat double, lon double")
     tiles = fixture_tiles_df(spark)
     for strategy in ("broadcast", "cogroup"):
         got = {r["pid"]: r for r in
                enrich_points(pts, tiles, strategy=strategy).collect()}
         assert got[0]["status"] == "OK" and got[0]["elevation"] is not None
-        for pid in (1, 2, 3):
+        for pid in range(1, 8):
             assert got[pid]["status"] == "OUT_OF_BOUNDS", (strategy, got[pid])
             assert got[pid]["elevation"] is None, (strategy, got[pid])
 
