@@ -18,7 +18,8 @@ Two physical strategies, chosen for the 100 TB case:
 - ``cogroup``: when the tile working set is too big to broadcast, shuffle
   both sides by tile_key and run the kernel per cogroup.  The tile blob
   crosses the wire once per group — never replicated per point row (a plain
-  join would glue 2.9 MB onto every point).  Optional salting splits
+  join would glue 2.9 MB onto every point).  Every point column rides the
+  kernel exactly and its output is the result.  Optional salting splits
   hotspot tiles (a landmark tile holding a large share of all points)
   into ``salt_factor`` sub-groups; AQE skew-join cannot help here because
   the skew is inside a single group, not a partition of many keys.
@@ -240,10 +241,9 @@ def enrich_points(points: DataFrame, tiles: DataFrame, *,
     (HGT) plans stay map-only.  False forces the map-only plan."""
     clash = {"elevation", "status"} & set(points.columns)
     if clash:
-        # fail fast and identically for BOTH strategies: the broadcast
-        # path's withColumn would silently REPLACE the caller's column
-        # while the cogroup join-back would emit a duplicate name that
-        # explodes later as AMBIGUOUS_REFERENCE (r5 code-review)
+        # fail fast and identically for BOTH strategies: both write these
+        # two names (and carry their internals under them), so a caller's
+        # column would be silently replaced (r5 code-review)
         raise ValueError(f"enrich_points: points already has {sorted(clash)} "
                          "— rename before enriching")
     points = with_tile_key(points)
@@ -315,127 +315,133 @@ def _enrich_broadcast(points: DataFrame, tiles: DataFrame,
                 acc.add(stats[k] - stats0[k])
         return pd.DataFrame({"elevation": elev, "code": code})
 
+    # the UDF's struct rides under the reserved "elevation": no user column is touched
     lookup_udf = F.pandas_udf(lookup, returnType=result_type)
     return (points
-            .withColumn("_r", lookup_udf(F.col("lat"), F.col("lon")))
-            .withColumn("elevation", F.col("_r.elevation"))
-            .withColumn("status", _status_col(F.col("_r.code")))
-            .drop("_r"))
+            .withColumn("elevation", lookup_udf(F.col("lat"), F.col("lon")))
+            .withColumn("status", _status_col(F.col("elevation.code")))
+            .withColumn("elevation", F.col("elevation.elevation")))
+
+
+#: split a tile whose points' bytes (as text) pass this: the cogroup kernel
+#: holds a group in one Python worker at about 3.3x its bytes (25k points
+#: of 8 KB text peaked at 794 MB)
+_TARGET_GROUP_BYTES = 256 << 20
 
 
 def _adaptive_salt_map(points: DataFrame, target_points_per_group: int,
                        max_salt: int) -> dict[str, int]:
-    """Per-tile salt factor proportional to the tile's point count — the
-    'tile-hotspot salting' of SURVEY.md §4 — for the HOT tiles only (k > 1;
-    every other tile keeps one group).  The per-tile count aggregation is
-    map-side-combined and tiny (one row per tile)."""
-    counts = points.groupBy("tile_key").agg(F.count(F.lit(1)).alias("n")).collect()
-    salt = {r["tile_key"]: min(max_salt, -(-r["n"] // target_points_per_group))
+    """Per-tile salt factor proportional to the tile's point count or
+    bytes, whichever splits more — the 'tile-hotspot salting' of SURVEY.md
+    §4 — for the HOT tiles only (k > 1; every other tile keeps one group).
+    The per-tile aggregation is map-side-combined and tiny (one row per
+    tile)."""
+    row_bytes = sum((F.coalesce(F.octet_length(F.col(c).cast("string")), F.lit(0))
+                     for c in points.columns), F.lit(0))
+    counts = points.groupBy("tile_key").agg(F.count(F.lit(1)).alias("n"),
+                                            F.sum(row_bytes).alias("bytes")).collect()
+    salt = {r["tile_key"]: min(max_salt, max(-(-r["n"] // target_points_per_group),
+                                             -(-r["bytes"] // _TARGET_GROUP_BYTES)))
             for r in counts if r["tile_key"] is not None}
     return {key: k for key, k in salt.items() if k > 1}
 
 
-def _cogroup_kernel(out_cols: list[str], risky: list[str], dedup: bool,
-                    interpolation: str):
+def _cogroup_kernel(names: list[str], interpolation: str):
     """The cogroup kernel: one tile's points (plus its tile row, if any)
-    -> ``out_cols`` + (elevation, code).  ``risky`` columns arrive as
-    masked transport (see _enrich_cogroup) and are rebuilt exactly;
-    ``dedup`` computes each distinct coordinate once (join-back mode)."""
+    -> ``names`` + (elevation, status code)."""
 
     def fn(pts: pd.DataFrame, tls: pd.DataFrame) -> pd.DataFrame:
-        for c in risky:
-            # rebuild the exact nullable bigint from its masked
-            # transport: int64 values (never float64) + bool mask
-            pts[c] = pd.arrays.IntegerArray(
-                pts[c].to_numpy(dtype=np.int64),
-                pts[f"__null_{c}"].to_numpy(dtype=bool))
-        if dedup:
-            # NaNs dedup as equal in pandas, matching Spark's NaN-normalized
-            # join, so the join-back side stays unique
-            pts = pts.drop_duplicates(subset=["lat", "lon"])
-        out = pts[out_cols].copy()
+        out = pts[names].copy()
         tile = None
         if len(tls):
             r = tls.iloc[0]
             tile = (int(r["sw_lat"]), int(r["sw_lon"]), r["encoding"], bytes(r["data"]))
-        elev, code = _enrich_one_tile_codes(out["lat"].to_numpy(dtype=np.float64),
-                                            out["lon"].to_numpy(dtype=np.float64),
+        elev, code = _enrich_one_tile_codes(pts["lat"].to_numpy(dtype=np.float64),
+                                            pts["lon"].to_numpy(dtype=np.float64),
                                             tile, interpolation)
         if len(out) and pd.isna(out["tile_key"].iloc[0]):
             # the NULL tile_key group: OUT_OF_BOUNDS (op-14), never
-            # TILE_MISSING — as the join-back mode's coalesce
+            # TILE_MISSING
             code[:] = CODE_OUT_OF_BOUNDS
-        out["elevation"], out["code"] = elev, code
+        out["elevation"], out["status"] = elev, code
         return out
 
     return fn
 
 
-#: column types that cross the Arrow boundary at fixed width — carrying
-#: them through the cogroup kernel is cheaper than the join-back below
-_ARROW_CHEAP_TYPES = ("tinyint", "smallint", "int", "bigint", "float",
-                      "double", "boolean", "date", "timestamp",
-                      "timestamp_ntz")
-_CARRY_MAX_COLS = 8
+#: carried as text (_pandas_transport): Java's round-trip digits, "NaN", an
+#: NTZ literal, a timestamp's epoch microseconds (free of the session zone)
+_AS_TEXT = (T.LongType, T.FloatType, T.DoubleType, T.TimestampType,
+            T.TimestampNTZType)
+
+
+def _map_leaves(c: Column, t: T.DataType, leaf) -> Column:
+    """``c`` (of type ``t``) with ``leaf(value, type)`` applied to it, or
+    to every value inside its arrays, maps and structs."""
+    if isinstance(t, T.ArrayType):
+        return F.transform(c, lambda x: _map_leaves(x, t.elementType, leaf))
+    if isinstance(t, T.MapType):
+        c = F.transform_keys(c, lambda k, _: _map_leaves(k, t.keyType, leaf))
+        return F.transform_values(c, lambda _, v: _map_leaves(v, t.valueType, leaf))
+    if isinstance(t, T.StructType):
+        return F.when(c.isNotNull(), F.struct(
+            *[_map_leaves(c[f.name], f.dataType, leaf).alias(f.name) for f in t.fields]))
+    return leaf(c, t)
+
+
+def _leaf_to_text(c: Column, t: T.DataType) -> Column:
+    if isinstance(t, T.TimestampType):
+        c = F.unix_micros(c)
+    return c.cast("string") if isinstance(t, _AS_TEXT) else c
+
+
+def _leaf_from_text(c: Column, t: T.DataType) -> Column:
+    if isinstance(t, T.TimestampType):
+        return F.timestamp_micros(c.cast("long"))
+    return c.cast(t) if isinstance(t, _AS_TEXT) else c
+
+
+def _pandas_transport(points: DataFrame):
+    """How every point column crosses the cogroup kernel's pandas boundary
+    exactly, in one rule: each _AS_TEXT value, a column or inside an
+    array, map or struct, crosses as text and is cast back JVM-side.
+    Arrow -> pandas turns a bigint holding a null into float64 (inexact
+    past 2^53), pandas -> Arrow writes a float NaN back as NULL, and
+    pandas' datetime64[ns] ends in 2262.  Columns other than tile_key cross
+    under positional names, so none clashes with the salt key or the
+    kernel's output; lat and lon also cross as they are, for the kernel.
+    Returns (the frame sent, the kernel's output schema, the result
+    columns restored from the kernel's output)."""
+    fields = points.schema.fields
+    names = [f.name if f.name == "tile_key" else f"_c{i}" for i, f in enumerate(fields)]
+    coords = [F.col(names[points.columns.index(c)]).alias(c) for c in ("lat", "lon")]
+    slim = points.toDF(*names).select(
+        *[_map_leaves(F.col(n), f.dataType, _leaf_to_text).alias(n)
+          for f, n in zip(fields, names)], *coords)
+    schema = T.StructType([T.StructField(n, slim.schema[n].dataType, f.nullable)
+                           for f, n in zip(fields, names)])
+    restored = [_map_leaves(F.col(n), f.dataType, _leaf_from_text).alias(f.name)
+                for f, n in zip(fields, names)]
+    return slim, schema, restored
 
 
 def _enrich_cogroup(points: DataFrame, tiles: DataFrame,
                     interpolation: str, salt_factor: int | None,
                     target_points_per_group: int = 200_000,
                     max_salt: int = 64) -> DataFrame:
-    """Shuffle strategy, two Arrow-width modes (r7):
-
-    CARRY mode — when every extra point column is a fixed-width primitive
-    (_ARROW_CHEAP_TYPES) and there are at most _CARRY_MAX_COLS of them,
-    ALL columns ride through the cogroup kernel and the result is final:
-    no join-back.  Measured on the salted bench shape (one bigint extra):
-    7.6-8.9 exec-s vs 29-44 for the join-back form, identical rows — the
-    join-back's sort-merge of the full point set on (tile_key, lat, lon)
-    plus the in-group dedup dominated, while a few fixed-width columns
-    through Arrow are nearly free.
-
-    JOIN-BACK mode — wide/string/nested point schemas keep the r4
-    Arrow-slim plan: only (tile_key, lat, lon) crosses the Python
-    boundary — the kernel's entire input — and one
-    (elevation, code) pair per DISTINCT coordinate comes back; every other
-    point column stays JVM-side and is joined back on (tile_key, lat, lon)
-    after the kernel (the same columns-don't-cross discipline as the
-    broadcast path's scalar pandas_udf).  The kernel output is a pure
-    function of those three columns, so the equi-join-back is exact;
-    in-group pandas dedup makes the result side unique without an extra
-    shuffle (Spark joins treat NaN = NaN and normalizes -0.0, matching the
-    kernel's numeric view).  Null-key rows (null or overflowing coords ->
-    null tile_key) can't equi-join; they are exactly the OUT_OF_BOUNDS
-    rows, restored by the coalesce below — pinned in
+    """Shuffle strategy: every point column rides through the one cogroup
+    kernel (exactly, _pandas_transport) and the kernel's output is the
+    result.  Null-key rows (null or overflowing coordinates -> null
+    tile_key) form their own group and come back OUT_OF_BOUNDS — pinned in
     test_null_coords_are_out_of_bounds_both_strategies."""
-    dtypes = dict(points.dtypes)
-    nullable = {f.name: f.nullable for f in points.schema.fields}
-    extras = [c for c in points.columns if c not in ("tile_key", "lat", "lon")]
-    # NULLABLE bigint extras need masked transport (ADVICE r7): a bigint
-    # column holding any null arrives in pandas as float64 (NaN-encodes
-    # null), silently losing precision for values >= 2^53.  Carry them as
-    # (coalesce(c, 0), c IS NULL) — both Arrow-exact — and rebuild a
-    # pandas nullable Int64 inside the kernel; each such column therefore
-    # counts twice against the carry width budget.  Smaller ints are
-    # float64-exact and doubles NaN-roundtrip, so only bigint needs this.
-    risky = [c for c in extras if dtypes[c] == "bigint" and nullable.get(c)]
-    carry = (len(extras) + len(risky) <= _CARRY_MAX_COLS
-             and all(dtypes[c] in _ARROW_CHEAP_TYPES for c in extras))
-    if not carry:
-        extras = risky = []
-    out_cols = ["tile_key", "lat", "lon"] + extras
-    slim = points.select(
-        "tile_key", "lat", "lon",
-        *[F.coalesce(F.col(c), F.lit(0)).alias(c) if c in risky else F.col(c)
-          for c in extras],
-        *[F.col(c).isNull().alias(f"__null_{c}") for c in risky])
+    slim, schema, restored = _pandas_transport(points)
     tls = (tiles.join(points.select("tile_key").distinct(), "tile_key", "left_semi")
            .select("tile_key", "sw_lat", "sw_lon", "encoding", "data"))
     keys = ["tile_key"]
     k_col = None
     if salt_factor is None:
-        # adaptive: split only hot tiles, k ~ point_count / target
-        hot = _adaptive_salt_map(points, target_points_per_group, max_salt)
+        # adaptive: split only hot tiles, k ~ point count or bytes / target
+        hot = _adaptive_salt_map(slim, target_points_per_group, max_salt)
         if hot:
             entries = [F.lit(x) for kv in hot.items() for x in kv]
             k_col = F.coalesce(F.create_map(*entries)[F.col("tile_key")], F.lit(1))
@@ -447,20 +453,12 @@ def _enrich_cogroup(points: DataFrame, tiles: DataFrame,
         tls = tls.withColumn("_salt", F.explode(F.sequence(F.lit(0), k_col - 1)))
         keys = ["tile_key", "_salt"]
 
-    schema = (", ".join(f"`{c}` {dtypes[c]}" for c in out_cols)
-              + ", elevation double, code tinyint")
-    res = (slim.groupBy(*keys).cogroup(tls.groupBy(*keys))
-           .applyInPandas(_cogroup_kernel(out_cols, risky, not carry, interpolation),
-                          schema))
-    if carry:
-        return res.select(*points.columns, F.col("elevation"),
-                          _status_col(F.col("code")).alias("status"))
-    res = (res.withColumnRenamed("elevation", "__enrich_elev")
-           .withColumnRenamed("code", "__enrich_code"))
-    code = F.coalesce(F.col("__enrich_code"), F.lit(CODE_OUT_OF_BOUNDS))
-    return (points.join(res, ["tile_key", "lat", "lon"], "left")
-            .select(*points.columns, F.col("__enrich_elev").alias("elevation"),
-                    _status_col(code).alias("status")))
+    schema = schema.add("elevation", T.DoubleType()).add("status", T.ByteType())
+    kernel = _cogroup_kernel(schema.names[:-2], interpolation)
+    return (slim.groupBy(*keys).cogroup(tls.groupBy(*keys))
+            .applyInPandas(kernel, schema)
+            .select(*restored, F.col("elevation"),
+                    _status_col(F.col("status")).alias("status")))
 
 
 def missing_tiles(points: DataFrame, tiles: DataFrame) -> DataFrame:

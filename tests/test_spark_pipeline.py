@@ -2,6 +2,10 @@
 bilinear enrichment, verified against the independent scalar reference
 and the fixture goldens."""
 
+import datetime as dt
+import math
+from decimal import Decimal
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +16,7 @@ from helpers import ref_bilinear, ref_nearest
 from elevation_service_spark import fixtures, kernels
 from elevation_service_spark.functions import (cell_id_col, mercator_x_col,
                                                mercator_y_col, skadi_key_col)
+from elevation_service_spark.operators import lookup
 from elevation_service_spark.operators.extract import extract_coords
 from elevation_service_spark.operators.lookup import (enrich_points,
                                                       missing_tiles)
@@ -110,11 +115,19 @@ def _golden_points(spark, include_missing=True, include_oob=True):
     return df, expected
 
 
-@pytest.mark.parametrize("strategy,salt", [("broadcast", None), ("cogroup", None), ("cogroup", 4)])
-def test_enrich_points_bit_exact_all_strategies(spark, strategy, salt):
+@pytest.mark.parametrize("strategy,salt", [("broadcast", None), ("cogroup", None), ("cogroup", 4),
+                                           ("cogroup", "bytes")])
+def test_enrich_points_bit_exact_all_strategies(spark, monkeypatch, strategy, salt):
     pts, expected = _golden_points(spark)
     tiles = fixture_tiles_df(spark)
+    by_bytes = salt == "bytes"
+    if by_bytes:
+        # adaptive salting splits a tile by its rows' bytes, not only by
+        # its point count
+        monkeypatch.setattr(lookup, "_TARGET_GROUP_BYTES", 64)
+        salt = None
     out = enrich_points(pts, tiles, strategy=strategy, salt_factor=salt)
+    assert ("_salt" in out._jdf.queryExecution().toString()) == (salt is not None or by_bytes)
     got = {r["pid"]: r for r in out.collect()}
     assert len(got) == len(expected)
     for pid, (elev, status) in enumerate(expected):
@@ -237,9 +250,11 @@ def test_null_coords_are_out_of_bounds_both_strategies(spark):
 def test_cogroup_carry_nullable_bigint_exact_past_2_53(spark):
     """ADVICE r7: a NULLABLE bigint extra used to cross the Arrow
     boundary as float64 (NaN-encodes null), silently losing precision
-    for values >= 2^53.  Carry mode now transports such columns as
+    for values >= 2^53.  The cogroup kernel now transports such columns as
     (coalesce, null-mask) and rebuilds a pandas nullable Int64, so the
-    round trip is exact for any int64 value, nulls preserved."""
+    round trip is exact for any int64 value, nulls preserved.  So is every
+    other column type, nested ones included: the cogroup rows equal the
+    broadcast rows, whose point columns never cross into Python."""
     big = (1 << 53) + 1  # first value float64 cannot represent
     neg = -(1 << 62) - 7
     rows = [(0, 57.5, 11.5, big), (1, 57.6, 11.6, None),
@@ -252,7 +267,7 @@ def test_cogroup_carry_nullable_bigint_exact_past_2_53(spark):
     assert got[1]["tag"] is None
     assert got[2]["tag"] == neg
     assert got[3]["tag"] == big + 2 and got[3]["status"] == "OUT_OF_BOUNDS"
-    # same answers through the join-back branch (string extra disables carry)
+    # same answers with a string column alongside
     pts2 = pts.withColumn("note", F.concat(F.lit("n"), F.col("pid")))
     got2 = {r["pid"]: r for r in
             enrich_points(pts2, tiles, strategy="cogroup").collect()}
@@ -260,22 +275,88 @@ def test_cogroup_carry_nullable_bigint_exact_past_2_53(spark):
         assert got2[pid]["tag"] == got[pid]["tag"]
         assert got2[pid]["status"] == got[pid]["status"]
 
+    nan = float("nan")
+    utc = dt.timezone.utc
+    late, early = dt.datetime(9999, 12, 31, 23, 59, 59, 999999), dt.datetime(1500, 1, 1)
+    wide = [
+        (0, 57.5, 11.5, nan, late.replace(tzinfo=utc), late,
+         Decimal("12345678901234567890.123456789012345678"), bytearray(b"\x00\xff"),
+         [1, None, 3], {"k": 1}, (1, "s"), "x" * 4096,
+         [nan, None, -0.0], [big, None, neg], {"t": (nan, late.replace(tzinfo=utc), late)}),
+        (1, 57.6, 11.6, None, early.replace(tzinfo=utc), early,
+         Decimal("-0.000000000000000001"), bytearray(b""), [], {}, (None, None), "",
+         [], [], {"t": (None, early.replace(tzinfo=utc), early)}),
+        (2, nan, 11.5, 2.5, None, None, None, None, None, None, None, None,
+         None, None, None),
+        (3, 10.5, 10.5, -0.0, late.replace(tzinfo=utc), early,
+         Decimal(0), bytearray(b"b"), [None], {"z": None}, None, "y",
+         [None], [None], {"z": None}),
+    ]
+    pts3 = (spark.createDataFrame(
+        wide, "pid int, lat double, lon double, d double, ts timestamp, "
+              "tsn timestamp_ntz, dec decimal(38,18), bin binary, arr array<int>, "
+              "m map<string,int>, st struct<a:int,b:string>, txt string, "
+              "ad array<double>, al array<bigint>, "
+              "nt map<string,struct<d:double,ts:timestamp,tsn:timestamp_ntz>>")
+        .withColumn("dn", F.lit(nan)))  # a non-nullable NaN column
+    # fixed-width columns alone, then every type together
+    for frame in (pts3.select("pid", "lat", "lon", "d", "dn", "ts", "tsn"), pts3):
+        by = {s: {r["pid"]: r for r in enrich_points(frame, tiles, strategy=s).collect()}
+              for s in ("broadcast", "cogroup")}
+        assert math.isnan(by["cogroup"][0]["d"]) and math.isnan(by["cogroup"][0]["dn"])
+        assert math.isnan(by["cogroup"][2]["lat"])
+        assert by["cogroup"][2]["status"] == "OUT_OF_BOUNDS"
+        assert by["cogroup"][0]["tsn"] == late and by["cogroup"][1]["tsn"] == early
+        for pid in range(4):
+            # repr: NaN != NaN, but both print "nan"
+            assert repr(by["cogroup"][pid]) == repr(by["broadcast"][pid]), pid
+    assert by["cogroup"][0]["txt"] == "x" * 4096
+    # inside arrays, maps and structs too: NaN and NULL stay apart, a
+    # bigint keeps every bit, a timestamp may pass 2262
+    ad = by["cogroup"][0]["ad"]
+    assert math.isnan(ad[0]) and ad[1] is None and math.copysign(1, ad[2]) == -1
+    assert by["cogroup"][0]["al"] == [big, None, neg]
+    assert math.isnan(by["cogroup"][0]["nt"]["t"]["d"])
+    assert by["cogroup"][0]["nt"]["t"]["tsn"] == late
+
 
 def test_cogroup_join_back_branch_with_string_extra(spark):
-    """ADVICE r7: pin the join-back branch directly (all other cogroup
-    unit tests now exercise carry mode) — a string extra forces the
-    Arrow-slim kernel + equi-join-back, including the null-coords
-    OUT_OF_BOUNDS coalesce restore."""
-    rows = [(0, 57.5, 11.5, "a"), (1, None, 11.5, "b"), (2, 10.5, 10.5, "c")]
+    """ADVICE r7: a string column rides the cogroup kernel, including the
+    null-coords OUT_OF_BOUNDS restore.  Every point comes back exactly once
+    (two points share a coordinate), an empty frame comes back empty with
+    the same columns, and the engine's internal names (the salt key, the
+    status code, the broadcast UDF's struct) never touch a user column."""
+    rows = [(0, 57.5, 11.5, "a"), (1, None, 11.5, "b"), (2, 10.5, 10.5, "c"),
+            (3, 57.25, 11.25, "d"), (4, 57.25, 11.25, "e")]
     pts = spark.createDataFrame(rows, "pid int, lat double, lon double, label string")
     tiles = fixture_tiles_df(spark)
-    got = {r["pid"]: r for r in
-           enrich_points(pts, tiles, strategy="cogroup").collect()}
+    out = enrich_points(pts, tiles, strategy="cogroup").collect()
+    got = {r["pid"]: r for r in out}
     assert got[0]["status"] == "OK" and got[0]["elevation"] is not None
     assert got[0]["label"] == "a"
     assert got[1]["status"] == "OUT_OF_BOUNDS" and got[1]["elevation"] is None
     assert got[1]["label"] == "b"
     assert got[2]["status"] == "TILE_MISSING" and got[2]["label"] == "c"
+    assert sorted((r["pid"], r["label"]) for r in out) == [
+        (0, "a"), (1, "b"), (2, "c"), (3, "d"), (4, "e")]
+    assert got[3]["elevation"] == got[4]["elevation"] is not None
+
+    empty = enrich_points(pts.limit(0), tiles, strategy="cogroup")
+    assert empty.columns == pts.columns + ["tile_key", "elevation", "status"]
+    assert empty.collect() == []
+
+    # fixed-width columns only, no string column alongside
+    clash = pts.select("pid", "lat", "lon", (F.col("pid") + 41).alias("_salt"),
+                       (F.col("pid") * 3).alias("code"), (F.col("pid") * 2).alias("_r"))
+    for strategy, salt in (("broadcast", None), ("cogroup", 2)):
+        res = enrich_points(clash, tiles, strategy=strategy, salt_factor=salt)
+        assert res.columns == clash.columns + ["tile_key", "elevation", "status"]
+        res_rows = res.collect()
+        assert len(res_rows) == len(rows), strategy
+        for r in res_rows:
+            assert (r["_salt"], r["code"], r["_r"]) == (
+                r["pid"] + 41, r["pid"] * 3, r["pid"] * 2), (strategy, r)
+            assert r["status"] == got[r["pid"]]["status"], (strategy, r)
 
 
 def test_fetch_tiles_plug_point(spark, tmp_path):
