@@ -42,8 +42,8 @@ def hgt_size_for_bytes(n: int, allow_overview: bool = False) -> int:
     ``allow_overview=True`` additionally accepts any exact 2*s^2 byte
     count — the overview tiles tile_pyramid/tile_mosaic emit (halved
     grids are not SRTM-sized).  It is an explicit OPT-IN (ADVICE r6/r7):
-    the enrichment/lookup decode path (enrich_points, add_elevation_docs,
-    tiles_bytes consumers) keeps the strict two-size check, so a
+    the enrichment/lookup decode path (enrich_points, add_elevation_docs
+    and the fused GeoJSON pass) keeps the strict two-size check, so a
     truncated blob that coincidentally lands on 2*s^2 bytes still raises
     instead of silently decoding as an s-by-s grid.  ALL raster-analysis
     operators (tiles_to_points, tile_terrain/slope/tri/flowacc/flowdir/

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .lookup import _lookup_batch, _tile_map, enrich_points, tiles_bytes
+from .lookup import _broadcast_tiles, _lookup_batch, enrich_points
 
 _GEOM_TYPES = {"Point", "MultiPoint", "LineString", "MultiLineString",
                "Polygon", "MultiPolygon", "GeometryCollection", "Feature",
@@ -243,8 +243,7 @@ def add_elevation_docs_fused(docs: DataFrame, tiles: DataFrame, *,
                              interpolation: str = "bilinear",
                              url_col: str = "url", geojson_col: str = "geojson",
                              max_doc_bytes: int = DEFAULT_MAX_DOC_BYTES,
-                             broadcast_bytes_threshold: int = 512 << 20,
-                             _tiles_bytes: int | None = None) -> DataFrame:
+                             broadcast_bytes_threshold: int = 512 << 20) -> DataFrame:
     """Single-pass POST /geojson: ONE mapInPandas walks, enriches (broadcast
     tile map + the same batch lookup as enrich_points' broadcast
     strategy), and rewrites each document in place — one JSON
@@ -258,17 +257,22 @@ def add_elevation_docs_fused(docs: DataFrame, tiles: DataFrame, *,
     very pass fusion eliminates), so this path broadcasts the WHOLE tile
     table — guarded by ``broadcast_bytes_threshold`` (ADVICE r3: an
     unguarded collect here OOMs the driver on a large tile table).  Callers
-    go through add_elevation_docs, which probes the size and falls back to
-    the flatten→enrich→reassemble pipeline (which CAN left-semi-prune
-    tiles) when the table is too big; a direct oversize call raises."""
-    sz = tiles_bytes(tiles) if _tiles_bytes is None else _tiles_bytes
-    if sz > broadcast_bytes_threshold:
-        raise ValueError(
-            f"tile table is {sz} bytes > broadcast threshold "
-            f"{broadcast_bytes_threshold}; the fused single-pass form cannot "
-            "prune tiles — use add_elevation_docs(strategy='auto'/'broadcast'/"
-            "'cogroup'), which prunes to the docs' tile working set")
-    bc = docs.sparkSession.sparkContext.broadcast(_tile_map(tiles))
+    go through add_elevation_docs, which falls back to the
+    flatten→enrich→reassemble pipeline (which CAN left-semi-prune tiles)
+    when the table is too big; a direct oversize call raises."""
+    sz, tile_map = _broadcast_tiles(tiles, threshold=broadcast_bytes_threshold)
+    if tile_map is None:
+        raise ValueError(f"tile table is {sz} bytes > broadcast threshold "
+                         f"{broadcast_bytes_threshold}; the fused pass cannot prune "
+                         "tiles — add_elevation_docs prunes to the docs' tiles")
+    return _fused_pass(docs, tile_map, interpolation, url_col, geojson_col,
+                       max_doc_bytes)
+
+
+def _fused_pass(docs: DataFrame, tile_map: dict, interpolation: str,
+                url_col: str, geojson_col: str, max_doc_bytes: int) -> DataFrame:
+    """add_elevation_docs_fused's map-only plan, with ``tile_map`` broadcast."""
+    bc = docs.sparkSession.sparkContext.broadcast(tile_map)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tile_map = bc.value
@@ -304,14 +308,10 @@ def add_elevation_docs(docs: DataFrame, tiles: DataFrame, *,
     broadcast/cogroup pick; "broadcast" / "cogroup" force the flatten →
     enrich → re-assemble pipeline with that kernel-join strategy."""
     if strategy in ("fused", "auto"):
-        sz = tiles_bytes(tiles)  # sum(length(data)) — the data column is a
-        # full scan on a big tile table, so probe ONCE and hand the result down
-        if sz <= broadcast_bytes_threshold:
-            return add_elevation_docs_fused(
-                docs, tiles, interpolation=interpolation,
-                max_doc_bytes=max_doc_bytes,
-                broadcast_bytes_threshold=broadcast_bytes_threshold,
-                _tiles_bytes=sz)
+        sz, tile_map = _broadcast_tiles(tiles, threshold=broadcast_bytes_threshold)
+        if tile_map is not None:
+            return _fused_pass(docs, tile_map, interpolation, "url", "geojson",
+                               max_doc_bytes)
         if strategy == "fused":
             # the caller asked for the map-only single-pass plan by name;
             # the fallback is a materially different plan (shuffling,

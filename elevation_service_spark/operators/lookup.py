@@ -9,8 +9,9 @@ Two physical strategies, chosen for the 100 TB case:
 
 - ``broadcast``: when the *working set* of tiles is small (the common case —
   a query touches a bounded region), ship the tile bytes to every worker
-  once and enrich with a single ``mapInPandas`` pass over the points.
-  **Zero shuffle of the points table** — at 100 TB of pages this is the
+  once (``_broadcast_tiles``: one keys-and-bytes query, one Arrow fetch)
+  and enrich with a scalar ``pandas_udf`` over (lat, lon).  **Zero
+  shuffle of the points table** — at 100 TB of pages this is the
   difference between a map-only job and a full-table shuffle.  The
   reference's LRU tile cache (tileset.js § TileSet, TILE_SET_CACHE=128)
   reappears as a per-worker decoded-grid LRU of the same default size.
@@ -176,19 +177,32 @@ def _tile_ids(lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
     return tid
 
 
-def _tile_map(tiles: DataFrame) -> dict:
-    """Collect a tile table into the broadcast lookup map: packed tile id
-    -> (sw_lat, sw_lon, encoding, data)."""
-    rows = tiles.select("sw_lat", "sw_lon", "encoding", "data").collect()
-    ids = _tile_ids(np.array([r["sw_lat"] for r in rows], dtype=np.float64),
-                    np.array([r["sw_lon"] for r in rows], dtype=np.float64))
-    return {int(t): (r["sw_lat"], r["sw_lon"], r["encoding"], bytes(r["data"]))
-            for t, r in zip(ids, rows)}
+def _broadcast_tiles(tiles: DataFrame, points: DataFrame | None = None,
+                     threshold: int | None = None) -> tuple[int | None, dict | None]:
+    """The one broadcast-or-spill decision of every lookup entry point:
+    (working-set bytes, tile map: packed tile id -> (sw_lat, sw_lon,
+    encoding, data)), the map None (spill) past ``threshold``.  The
+    working set is tiles ⋉ distinct(points.tile_key), or the whole table.
+    A threshold costs one (tile_key, length(data)) query; then one Arrow
+    fetch reads the surviving tiles (bytes None without a threshold)."""
+    needed, size = tiles, None
+    if points is not None:
+        needed = tiles.join(points.select("tile_key").distinct(), "tile_key", "left_semi")
+    if threshold is not None:
+        sizes = needed.select("tile_key", F.length("data").alias("n")).collect()
+        size = sum(r["n"] or 0 for r in sizes)
+        if size > threshold:
+            return size, None
+        if points is not None:
+            needed = tiles.filter(F.col("tile_key").isin([r["tile_key"] for r in sizes]))
+    t = needed.select("sw_lat", "sw_lon", "encoding", "data").toArrow()
+    ids = _tile_ids(*(t[c].to_numpy().astype(np.float64) for c in ("sw_lat", "sw_lon")))
+    return size, dict(zip(ids.tolist(), zip(*(c.to_pylist() for c in t.columns))))
 
 
 def _lookup_batch(tile_map: dict, lat: np.ndarray, lon: np.ndarray,
                   interpolation: str) -> tuple[np.ndarray, np.ndarray]:
-    """(elevation, status code) of a batch of points against a _tile_map:
+    """(elevation, status code) of a batch of points against a tile map:
     the points are bucketed by tile id and each bucket runs the kernel
     once.  NULL coordinates arrive as NaN and come back OUT_OF_BOUNDS."""
     tid = _tile_ids(lat, lon)
@@ -198,15 +212,6 @@ def _lookup_batch(tile_map: dict, lat: np.ndarray, lon: np.ndarray,
         elev[idx], code[idx] = _enrich_one_tile_codes(
             lat[idx], lon[idx], tile_map.get(key), interpolation)
     return elev, code
-
-
-def tiles_bytes(tiles: DataFrame) -> int:
-    """Total payload bytes of a tile table — one tiny map-side agg.  The
-    single size metric behind every broadcast-vs-spill decision (enrich's
-    broadcast/cogroup pick and the fused-GeoJSON guard), so the two can
-    never diverge."""
-    return (tiles.agg(F.coalesce(F.sum(F.length("data")), F.lit(0)).alias("b"))
-            .collect()[0]["b"])
 
 
 def with_tile_key(points: DataFrame, key_col: str = "tile_key") -> DataFrame:
@@ -247,49 +252,36 @@ def enrich_points(points: DataFrame, tiles: DataFrame, *,
         raise ValueError(f"enrich_points: points already has {sorted(clash)} "
                          "— rename before enriching")
     points = with_tile_key(points)
-    if partition_by_key is True and not points.isStreaming:
-        points = points.repartition(F.col("tile_key"))
     if points.isStreaming:
-        # stream-static pattern: the working-set probe and tile pruning
-        # would require executing the stream — broadcast the whole tile
-        # table instead (cogroup is not stream-composable)
+        # stream-static pattern: pruning would require executing the
+        # stream — broadcast the whole tile table instead (cogroup is not
+        # stream-composable)
         if strategy == "cogroup":
             raise ValueError("cogroup strategy is not supported on streaming points")
-        return _enrich_broadcast(points, tiles, interpolation,
-                                 prune_tiles=False, cache_metrics=cache_metrics)
-    if strategy == "auto":
-        needed = points.select("tile_key").distinct()
-        sz = tiles_bytes(tiles.join(needed, "tile_key", "left_semi"))
-        strategy = "broadcast" if sz <= broadcast_bytes_threshold else "cogroup"
-    if strategy == "broadcast":
-        return _enrich_broadcast(points, tiles, interpolation, prune_tiles,
-                                 cache_metrics=cache_metrics,
-                                 auto_partition=partition_by_key is None)
+        strategy, prune_tiles, partition_by_key = "broadcast", False, False
+    if partition_by_key is True:
+        points = points.repartition(F.col("tile_key"))
+    if strategy in ("auto", "broadcast"):
+        _, tile_map = _broadcast_tiles(
+            tiles, points if prune_tiles else None,
+            broadcast_bytes_threshold if strategy == "auto" else None)
+        if tile_map is not None:
+            # auto partition_by_key (docstring): most working-set tiles need
+            # an expensive decode and the scan undersupplies parallelism
+            n_exp = sum(1 for t in tile_map.values() if t[2] not in _CHEAP_DECODE)
+            if (partition_by_key is None and 2 * n_exp > len(tile_map)
+                    and few_input_splits(points, points.sparkSession)):
+                points = points.repartition(F.col("tile_key"))
+            return _enrich_broadcast(points, tile_map, interpolation, cache_metrics)
     return _enrich_cogroup(points, tiles, interpolation, salt_factor)
 
 
 _CHEAP_DECODE = ("hgt", "hgt.gz")
 
 
-def _enrich_broadcast(points: DataFrame, tiles: DataFrame,
-                      interpolation: str, prune_tiles: bool = True,
-                      cache_metrics: dict | None = None,
-                      auto_partition: bool = False) -> DataFrame:
-    spark = points.sparkSession
-    if prune_tiles:
-        # fetch only requested tiles (reference lazy-load parity) — costs one
-        # extra pass over the points for the distinct keys; skip it when the
-        # tile table is known-small (prune_tiles=False)
-        tiles = tiles.join(points.select("tile_key").distinct(), "tile_key", "left_semi")
-    tile_map = _tile_map(tiles)
-    if auto_partition and tile_map:
-        # auto partition_by_key (enrich_points docstring): shuffle-spread
-        # the points over tiles only when the decode bill is dominated by
-        # expensive encodings AND the scan undersupplies parallelism
-        n_exp = sum(1 for t in tile_map.values() if t[2] not in _CHEAP_DECODE)
-        if 2 * n_exp > len(tile_map) and few_input_splits(points, spark):
-            points = points.repartition(F.col("tile_key"))
-    bc = spark.sparkContext.broadcast(tile_map)
+def _enrich_broadcast(points: DataFrame, tile_map: dict, interpolation: str,
+                      cache_metrics: dict | None = None) -> DataFrame:
+    bc = points.sparkSession.sparkContext.broadcast(tile_map)
 
     # scalar pandas_udf over exactly (lat, lon): every other column of the
     # points table stays JVM-side and never crosses the Arrow boundary;

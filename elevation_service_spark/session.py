@@ -29,6 +29,9 @@ def get_spark(app: str = "spark-elevation",
     if shuffle_partitions is None:
         # on a real cluster this would be ~2-3x total cores; locally match it
         shuffle_partitions = max(2 * cpus, 8)
+    # driver heap: half the host's RAM, capped at 12g — the JVM shares the
+    # host with the Python workers and the caller's own process
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
@@ -53,7 +56,8 @@ def get_spark(app: str = "spark-elevation",
                 "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{min(12 << 10, ram_mb // 2)}m")
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")

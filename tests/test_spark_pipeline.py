@@ -201,6 +201,58 @@ def test_auto_strategy_switches_on_working_set_size(spark):
         for pid, (elev, status) in enumerate(expected):
             assert got[pid]["status"] == status
             assert got[pid]["elevation"] == elev
+    # the edges: a threshold equal to the working set's bytes broadcasts,
+    # one byte less cogroups, with identical rows.  The golden points miss
+    # one fixture tile, so the whole table's bytes would route the equal
+    # threshold to cogroup; an empty and an all-NULL frame need 0 bytes.
+    left_out = fixtures.FIXTURE_TILES[0][0]
+    nulls = spark.createDataFrame([(0, None, None), (1, None, 11.5), (2, 57.5, None)],
+                                  "pid int, lat double, lon double")
+    some = pts.filter(skadi_key_col(F.col("lat"), F.col("lon")) != left_out)
+    total = tiles.agg(F.sum(F.length("data"))).first()[0]
+    for frame in (some, pts.limit(0), nulls):
+        keys = [r[0] for r in lookup.with_tile_key(frame).select("tile_key").collect()]
+        need = (tiles.filter(F.col("tile_key").isin(keys))
+                .agg(F.coalesce(F.sum(F.length("data")), F.lit(0))).first()[0])
+        assert need < total
+        rows = {}
+        for threshold, cogroup in ((need, False), (need - 1, True)):
+            out = enrich_points(frame, tiles, strategy="auto",
+                                broadcast_bytes_threshold=threshold)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert ("FlatMapCoGroupsInPandas" in plan) == cogroup, (threshold, plan)
+            rows[cogroup] = sorted(map(repr, out.collect()))
+        assert rows[False] == rows[True]
+        assert len(rows[False]) == frame.count()
+    got = {r["pid"]: r for r in enrich_points(some, tiles).collect()}
+    assert got and all((r["elevation"], r["status"]) == expected[pid]
+                       for pid, r in got.items())
+    assert {r["status"] for r in enrich_points(nulls, tiles).collect()} == {"OUT_OF_BOUNDS"}
+
+
+def test_auto_planning_jobs(spark):
+    """Building the auto enrich and GeoJSON plans runs only the one tile
+    working-set decision before any action: the keys-and-bytes query
+    (enrich: a semi-join with the points' distinct tile keys) and one
+    Arrow tile fetch.  A new driver-side probe shows up here first."""
+    from elevation_service_spark.operators.geojson import add_elevation_docs
+    sc = spark.sparkContext
+    pts, _ = _golden_points(spark)
+    tiles = fixture_tiles_df(spark)
+    tiles.count()  # the fixture frame is cached: its first use fills the cache
+    docs = spark.createDataFrame(
+        [(r["url"], r["geojson"]) for r in fixtures.geojson_docs()], ["url", "geojson"])
+
+    def planning_jobs(name, build):
+        sc.setJobGroup(name, name)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(name))
+
+    assert planning_jobs("plan-enrich", lambda: enrich_points(pts, tiles)) == 5
+    assert planning_jobs("plan-geojson", lambda: add_elevation_docs(docs, tiles)) == 2
 
 
 def test_lsh_bucket_cap_bounds_pathological_bucket(spark):
