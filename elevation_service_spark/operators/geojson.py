@@ -30,6 +30,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -260,19 +261,17 @@ def add_elevation_docs_fused(docs: DataFrame, tiles: DataFrame, *,
     go through add_elevation_docs, which falls back to the
     flatten→enrich→reassemble pipeline (which CAN left-semi-prune tiles)
     when the table is too big; a direct oversize call raises."""
-    sz, tile_map = _broadcast_tiles(tiles, threshold=broadcast_bytes_threshold)
-    if tile_map is None:
+    sz, _, bc = _broadcast_tiles(tiles, threshold=broadcast_bytes_threshold)
+    if bc is None:
         raise ValueError(f"tile table is {sz} bytes > broadcast threshold "
                          f"{broadcast_bytes_threshold}; the fused pass cannot prune "
                          "tiles — add_elevation_docs prunes to the docs' tiles")
-    return _fused_pass(docs, tile_map, interpolation, url_col, geojson_col,
-                       max_doc_bytes)
+    return _fused_pass(docs, bc, interpolation, url_col, geojson_col, max_doc_bytes)
 
 
-def _fused_pass(docs: DataFrame, tile_map: dict, interpolation: str,
+def _fused_pass(docs: DataFrame, bc: Broadcast, interpolation: str,
                 url_col: str, geojson_col: str, max_doc_bytes: int) -> DataFrame:
-    """add_elevation_docs_fused's map-only plan, with ``tile_map`` broadcast."""
-    bc = docs.sparkSession.sparkContext.broadcast(tile_map)
+    """add_elevation_docs_fused's map-only plan over the broadcast tile map."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tile_map = bc.value
@@ -308,10 +307,9 @@ def add_elevation_docs(docs: DataFrame, tiles: DataFrame, *,
     broadcast/cogroup pick; "broadcast" / "cogroup" force the flatten →
     enrich → re-assemble pipeline with that kernel-join strategy."""
     if strategy in ("fused", "auto"):
-        sz, tile_map = _broadcast_tiles(tiles, threshold=broadcast_bytes_threshold)
-        if tile_map is not None:
-            return _fused_pass(docs, tile_map, interpolation, "url", "geojson",
-                               max_doc_bytes)
+        sz, _, bc = _broadcast_tiles(tiles, threshold=broadcast_bytes_threshold)
+        if bc is not None:
+            return _fused_pass(docs, bc, interpolation, "url", "geojson", max_doc_bytes)
         if strategy == "fused":
             # the caller asked for the map-only single-pass plan by name;
             # the fallback is a materially different plan (shuffling,

@@ -9,12 +9,12 @@ Two physical strategies, chosen for the 100 TB case:
 
 - ``broadcast``: when the *working set* of tiles is small (the common case —
   a query touches a bounded region), ship the tile bytes to every worker
-  once (``_broadcast_tiles``: one keys-and-bytes query, one Arrow fetch)
+  once (``_broadcast_tiles``, which keeps the last built broadcast)
   and enrich with a scalar ``pandas_udf`` over (lat, lon).  **Zero
   shuffle of the points table** — at 100 TB of pages this is the
   difference between a map-only job and a full-table shuffle.  The
   reference's LRU tile cache (tileset.js § TileSet, TILE_SET_CACHE=128)
-  reappears as a per-worker decoded-grid LRU of the same default size.
+  reappears as that kept broadcast and a per-worker decoded-grid LRU.
 
 - ``cogroup``: when the tile working set is too big to broadcast, shuffle
   both sides by tile_key and run the kernel per cogroup.  The tile blob
@@ -34,6 +34,7 @@ from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -177,27 +178,75 @@ def _tile_ids(lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
     return tid
 
 
+#: the last auto decision's built tile broadcast on file-backed tiles (the
+#: reference's TileSet cache, one working set deep), or {}.  A miss
+#: replaces it, dropping only the reference: a lazy frame built on the old
+#: broadcast may still run.
+_TILE_MAP_SLOT: dict = {}
+_TILE_MAP_STATS = {"hits": 0, "misses": 0}
+
+
+def _tile_files(tiles: DataFrame) -> tuple | None:
+    """The file listing (a line per file with its path, length and mtime)
+    a deterministic plan whose every leaf is a file relation took when it
+    was read (a re-read relists), one JVM call per relation and no file
+    stat; None (never kept) for any other plan, and for a partitioned
+    catalog table, whose index lists its files only per query."""
+    plan = tiles._jdf.queryExecution().analyzed()
+    leaves = [plan.collectLeaves().apply(i) for i in range(plan.collectLeaves().size())]
+    if not plan.deterministic() or any(
+            leaf.getClass().getSimpleName() != "LogicalRelation"
+            or leaf.relation().getClass().getSimpleName() != "HadoopFsRelation"
+            or leaf.relation().location().getClass().getSimpleName() != "InMemoryFileIndex"
+            for leaf in leaves):
+        return None
+    return tuple(sorted(line for leaf in leaves for line in
+                        leaf.relation().location().allFiles().mkString("\n").splitlines()))
+
+
 def _broadcast_tiles(tiles: DataFrame, points: DataFrame | None = None,
-                     threshold: int | None = None) -> tuple[int | None, dict | None]:
+                     threshold: int | None = None) -> tuple[int | None, tuple, Broadcast | None]:
     """The one broadcast-or-spill decision of every lookup entry point:
-    (working-set bytes, tile map: packed tile id -> (sw_lat, sw_lon,
-    encoding, data)), the map None (spill) past ``threshold``.  The
-    working set is tiles ⋉ distinct(points.tile_key), or the whole table.
-    A threshold costs one (tile_key, length(data)) query; then one Arrow
-    fetch reads the surviving tiles (bytes None without a threshold)."""
-    needed, size = tiles, None
+    (working-set bytes, its encodings, Broadcast of the tile map: packed
+    tile id -> (sw_lat, sw_lon, encoding, data)), the Broadcast None
+    (spill) past ``threshold``.  The working set is the tiles of the
+    points' distinct tile keys that the table holds (so the driver never
+    holds more keys than the table has), or the whole table.  With a
+    threshold, _TILE_MAP_SLOT serves while the app, the file listing, the
+    plan (``sameSemantics``) and the keys match; a miss runs one
+    length(data) query, then under the threshold one Arrow fetch and a
+    broadcast, kept if the plan is file-backed.  Without one (explicit
+    broadcast, streaming): the fetch alone, never kept."""
+    global _TILE_MAP_SLOT
+    sc = tiles.sparkSession.sparkContext
+    files, slot = None if threshold is None else _tile_files(tiles), _TILE_MAP_SLOT
+    if not (files is not None and slot and (slot["app"], slot["files"]) == (sc.applicationId, files)
+            and slot["tiles"].sameSemantics(tiles)):
+        slot = {}
+    table_keys = keys = size = None
     if points is not None:
-        needed = tiles.join(points.select("tile_key").distinct(), "tile_key", "left_semi")
+        table_keys = slot.get("table_keys") or sorted(
+            {r[0] for r in tiles.select("tile_key").collect()} - {None})
+        keys = frozenset(r[0] for r in points.select("tile_key").filter(
+            F.col("tile_key").isin(table_keys)).distinct().collect())
+    if slot and keys == slot["keys"]:
+        _TILE_MAP_STATS["hits"] += 1
+        return slot["size"], slot["encodings"], slot["bc"] if slot["size"] <= threshold else None
+    needed = tiles if keys is None else tiles.filter(F.col("tile_key").isin(sorted(keys)))
     if threshold is not None:
-        sizes = needed.select("tile_key", F.length("data").alias("n")).collect()
-        size = sum(r["n"] or 0 for r in sizes)
+        _TILE_MAP_STATS["misses"] += 1
+        size = sum(r[0] or 0 for r in needed.select(F.length("data")).collect())
         if size > threshold:
-            return size, None
-        if points is not None:
-            needed = tiles.filter(F.col("tile_key").isin([r["tile_key"] for r in sizes]))
+            return size, (), None
     t = needed.select("sw_lat", "sw_lon", "encoding", "data").toArrow()
     ids = _tile_ids(*(t[c].to_numpy().astype(np.float64) for c in ("sw_lat", "sw_lon")))
-    return size, dict(zip(ids.tolist(), zip(*(c.to_pylist() for c in t.columns))))
+    tile_map = dict(zip(ids.tolist(), zip(*(c.to_pylist() for c in t.columns))))
+    encodings, bc = tuple(v[2] for v in tile_map.values()), sc.broadcast(tile_map)
+    if files is not None:
+        _TILE_MAP_SLOT = dict(app=sc.applicationId, files=files, tiles=tiles,
+                              table_keys=table_keys, keys=keys, size=size,
+                              encodings=encodings, bc=bc)
+    return size, encodings, bc
 
 
 def _lookup_batch(tile_map: dict, lat: np.ndarray, lon: np.ndarray,
@@ -262,27 +311,25 @@ def enrich_points(points: DataFrame, tiles: DataFrame, *,
     if partition_by_key is True:
         points = points.repartition(F.col("tile_key"))
     if strategy in ("auto", "broadcast"):
-        _, tile_map = _broadcast_tiles(
+        _, encodings, bc = _broadcast_tiles(
             tiles, points if prune_tiles else None,
             broadcast_bytes_threshold if strategy == "auto" else None)
-        if tile_map is not None:
+        if bc is not None:
             # auto partition_by_key (docstring): most working-set tiles need
             # an expensive decode and the scan undersupplies parallelism
-            n_exp = sum(1 for t in tile_map.values() if t[2] not in _CHEAP_DECODE)
-            if (partition_by_key is None and 2 * n_exp > len(tile_map)
+            n_exp = sum(1 for e in encodings if e not in _CHEAP_DECODE)
+            if (partition_by_key is None and 2 * n_exp > len(encodings)
                     and few_input_splits(points, points.sparkSession)):
                 points = points.repartition(F.col("tile_key"))
-            return _enrich_broadcast(points, tile_map, interpolation, cache_metrics)
+            return _enrich_broadcast(points, bc, interpolation, cache_metrics)
     return _enrich_cogroup(points, tiles, interpolation, salt_factor)
 
 
 _CHEAP_DECODE = ("hgt", "hgt.gz")
 
 
-def _enrich_broadcast(points: DataFrame, tile_map: dict, interpolation: str,
+def _enrich_broadcast(points: DataFrame, bc: Broadcast, interpolation: str,
                       cache_metrics: dict | None = None) -> DataFrame:
-    bc = points.sparkSession.sparkContext.broadcast(tile_map)
-
     # scalar pandas_udf over exactly (lat, lon): every other column of the
     # points table stays JVM-side and never crosses the Arrow boundary;
     # the UDF returns one double + one tinyint per row.

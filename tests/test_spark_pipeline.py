@@ -4,9 +4,12 @@ and the fixture goldens."""
 
 import datetime as dt
 import math
+import os
 from decimal import Decimal
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -20,7 +23,8 @@ from elevation_service_spark.operators import lookup
 from elevation_service_spark.operators.extract import extract_coords
 from elevation_service_spark.operators.lookup import (enrich_points,
                                                       missing_tiles)
-from elevation_service_spark.sources.tiles import fixture_tiles_df
+from elevation_service_spark.sources.tiles import (fixture_tiles_df, read_tiles,
+                                                   write_tiles)
 
 PAGES_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -230,29 +234,186 @@ def test_auto_strategy_switches_on_working_set_size(spark):
     assert {r["status"] for r in enrich_points(nulls, tiles).collect()} == {"OUT_OF_BOUNDS"}
 
 
-def test_auto_planning_jobs(spark):
-    """Building the auto enrich and GeoJSON plans runs only the one tile
-    working-set decision before any action: the keys-and-bytes query
-    (enrich: a semi-join with the points' distinct tile keys) and one
-    Arrow tile fetch.  A new driver-side probe shows up here first."""
-    from elevation_service_spark.operators.geojson import add_elevation_docs
+def _planning_jobs(spark, name, build):
+    """The Spark jobs ``build()`` submits (it only builds a plan), counted
+    in the job group ``name``, which must be new."""
     sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def _fixture_docs(spark):
+    return spark.createDataFrame(
+        [(r["url"], r["geojson"]) for r in fixtures.geojson_docs()], ["url", "geojson"])
+
+
+def test_auto_planning_jobs(spark, tmp_path):
+    """Building the auto enrich and GeoJSON plans runs only the one tile
+    working-set decision before any action.  A miss: the tile table's keys
+    and the points' distinct keys among them (enrich only; a shuffle stage
+    and its reduce), the length(data) query and one Arrow tile fetch.  A
+    repeat call on file-backed tiles reuses the kept broadcast: only the
+    points' keys remain.  A new driver-side probe shows up here first."""
+    from elevation_service_spark.operators.geojson import add_elevation_docs
     pts, _ = _golden_points(spark)
     tiles = fixture_tiles_df(spark)
     tiles.count()  # the fixture frame is cached: its first use fills the cache
-    docs = spark.createDataFrame(
-        [(r["url"], r["geojson"]) for r in fixtures.geojson_docs()], ["url", "geojson"])
+    docs = _fixture_docs(spark)
+    # an in-memory tile table is never kept: every call is a miss
+    for i in range(2):
+        assert _planning_jobs(spark, f"enrich-{i}", lambda: enrich_points(pts, tiles)) == 5
+        assert _planning_jobs(spark, f"geojson-{i}",
+                              lambda: add_elevation_docs(docs, tiles)) == 2
+    write_tiles(tiles, str(tmp_path / "tiles"))
+    for name, build, jobs in (("enrich", lambda t: enrich_points(pts, t), (5, 2)),
+                              ("geojson", lambda t: add_elevation_docs(docs, t), (2, 0))):
+        for i, n in enumerate(jobs):  # a miss, then a hit on a re-read
+            on_disk = read_tiles(spark, str(tmp_path / "tiles"))
+            assert _planning_jobs(spark, f"{name}-file-{i}", lambda: build(on_disk)) == n
 
-    def planning_jobs(name, build):
-        sc.setJobGroup(name, name)
-        try:
-            build()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(name))
 
-    assert planning_jobs("plan-enrich", lambda: enrich_points(pts, tiles)) == 5
-    assert planning_jobs("plan-geojson", lambda: add_elevation_docs(docs, tiles)) == 2
+def _tile_map_stats():
+    return dict(lookup._TILE_MAP_STATS)
+
+
+def _stats_delta(before):
+    return {k: v - before[k] for k, v in lookup._TILE_MAP_STATS.items()}
+
+
+def test_tile_map_cache_is_fresh(spark, tmp_path):
+    """A kept tile broadcast serves a re-read of unchanged tile files, with
+    rows identical to the miss, and never survives a change to a file: a
+    tile rewritten in place with other elevations comes back with them, and
+    a rewrite that only moves a file's mtime misses too."""
+    from elevation_service_spark.operators.geojson import add_elevation_docs
+    path = str(tmp_path / "tiles")
+    write_tiles(fixture_tiles_df(spark), path)
+    pts, expected = _golden_points(spark)
+    docs = _fixture_docs(spark)
+
+    for build in (lambda t: add_elevation_docs(docs, t), lambda t: enrich_points(pts, t)):
+        s0 = _tile_map_stats()
+        miss = sorted(map(repr, build(read_tiles(spark, path)).collect()))
+        assert _stats_delta(s0) == {"hits": 0, "misses": 1}
+        s0 = _tile_map_stats()
+        # bit-identical rows from the kept broadcast
+        assert sorted(map(repr, build(read_tiles(spark, path)).collect())) == miss
+        assert _stats_delta(s0) == {"hits": 1, "misses": 0}
+
+    # rewrite the N57E011 tile's file in place with every elevation + 7
+    key, sw_lat, sw_lon, size, enc = fixtures.FIXTURE_TILES[0]
+    grid = fixtures.tile_grid(sw_lat, sw_lon, size, plant_void=False) + 7
+    (f,) = [f for f in (tmp_path / "tiles").rglob("*.parquet")
+            if key in pq.read_table(f).column("tile_key").to_pylist()]
+    t = pq.read_table(f)
+    data = [fixtures.encode_tile(grid, enc) if k == key else d
+            for k, d in zip(t.column("tile_key").to_pylist(), t.column("data").to_pylist())]
+    pq.write_table(t.set_column(t.schema.get_field_index("data"), "data",
+                                pa.array(data, t.schema.field("data").type)), f)
+    (f.parent / f".{f.name}.crc").unlink()  # the checksum of the old bytes
+    s0 = _tile_map_stats()
+    got = {r["pid"]: r for r in enrich_points(pts, read_tiles(spark, path)).collect()}
+    assert _stats_delta(s0) == {"hits": 0, "misses": 1}
+    for pid, (elev, status) in enumerate(expected):
+        lat, lon = got[pid]["lat"], got[pid]["lon"]
+        if kernels.skadi_key(lat, lon) == key:
+            elev = ref_bilinear(grid, lat, lon, sw_lat, sw_lon)
+        assert (got[pid]["elevation"], got[pid]["status"]) == (elev, status), pid
+
+    # same bytes, later mtime: a miss
+    st = os.stat(f)
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 2_000_000_000))
+    s0 = _tile_map_stats()
+    enrich_points(pts, read_tiles(spark, path))
+    assert _stats_delta(s0) == {"hits": 0, "misses": 1}
+
+
+def test_tile_map_cache_router_edges(spark, tmp_path, monkeypatch):
+    """On the kept broadcast: this call's threshold still routes (one byte
+    under the working set cogroups, with identical rows); the empty and the
+    all-NULL-coordinate frames share the empty key set; points with many
+    distinct out-of-range keys add none of them to the driver's key set
+    and hit; a new key set replaces the kept broadcast, and a frame built
+    on the replaced one still runs; a kept broadcast of a stopped
+    SparkContext is replaced, never served; an explicit broadcast, an
+    in-memory or non-deterministic tile plan and a partitioned catalog
+    table are never kept."""
+    write_tiles(fixture_tiles_df(spark), str(tmp_path / "tiles"))
+    tiles = read_tiles(spark, str(tmp_path / "tiles"))
+    pts, expected = _golden_points(spark, include_missing=False, include_oob=False)
+    need = tiles.agg(F.sum(F.length("data"))).first()[0]
+
+    def golden(out):
+        got = {r["pid"]: r for r in out.collect()}
+        assert got and all((r["elevation"], r["status"]) == expected[pid]
+                           for pid, r in got.items())
+        return sorted(map(repr, got.values()))
+
+    monkeypatch.setattr(lookup, "_TILE_MAP_SLOT", {})
+    s0 = _tile_map_stats()
+    early = enrich_points(pts, tiles, broadcast_bytes_threshold=need)  # miss: kept
+    rows = golden(early)
+    spill = enrich_points(pts, tiles, broadcast_bytes_threshold=need - 1)  # hit
+    assert "FlatMapCoGroupsInPandas" in spill._jdf.queryExecution().executedPlan().toString()
+    assert golden(spill) == rows
+    assert _stats_delta(s0) == {"hits": 1, "misses": 1}
+
+    # one distinct out-of-range tile key per point, as from swapped axes or
+    # projected coordinates: only the tile table's keys reach the driver
+    garbage = spark.range(5000).select(
+        (F.col("id") + len(expected)).cast("int").alias("pid"),
+        (F.col("id") % 9 + 91.5).alias("lat"), (F.floor(F.col("id") / 9) + 181.5).alias("lon"))
+    assert garbage.select(skadi_key_col(F.col("lat"), F.col("lon"))).distinct().count() == 5000
+    s0 = _tile_map_stats()
+    out = enrich_points(pts.unionByName(garbage), tiles)
+    assert _stats_delta(s0) == {"hits": 1, "misses": 0}
+    assert lookup._TILE_MAP_SLOT["keys"] == {k for k, *_ in fixtures.FIXTURE_TILES}
+    assert {r["status"] for r in out.filter(F.col("pid") >= len(expected)).collect()} \
+        == {"OUT_OF_BOUNDS"}
+    assert golden(out.filter(F.col("pid") < len(expected))) == rows
+
+    nulls = spark.createDataFrame([(0, None, None), (1, None, 11.5), (2, 57.5, None)],
+                                  "pid int, lat double, lon double")
+    s0 = _tile_map_stats()
+    assert enrich_points(pts.limit(0), tiles).collect() == []  # miss: the empty key set
+    assert {r["status"] for r in enrich_points(nulls, tiles).collect()} == {"OUT_OF_BOUNDS"}
+    assert enrich_points(garbage, tiles).filter("status != 'OUT_OF_BOUNDS'").count() == 0
+    assert _stats_delta(s0) == {"hits": 2, "misses": 1}
+
+    # a new key set replaces the kept broadcast, which is dropped, not destroyed
+    assert golden(enrich_points(pts, tiles)) == rows
+    assert golden(early) == rows
+
+    # a kept broadcast of another (stopped) SparkContext is replaced, not served
+    lookup._TILE_MAP_SLOT["app"] = "stopped-app"
+    s0 = _tile_map_stats()
+    assert golden(enrich_points(pts, tiles)) == rows
+    assert _stats_delta(s0) == {"hits": 0, "misses": 1}
+    assert lookup._TILE_MAP_SLOT["app"] == spark.sparkContext.applicationId
+
+    assert lookup._tile_files(tiles) is not None
+    kept = lookup._TILE_MAP_SLOT
+    s0 = _tile_map_stats()  # an explicit broadcast neither reads nor replaces it
+    assert golden(enrich_points(pts, tiles, strategy="broadcast")) == rows
+    assert _stats_delta(s0) == {"hits": 0, "misses": 0}
+    assert lookup._TILE_MAP_SLOT is kept
+    tiles.write.partitionBy("encoding").option("path", str(tmp_path / "table")) \
+        .saveAsTable("tile_map_cache_tiles")
+    try:
+        for never in (fixture_tiles_df(spark), tiles.filter(F.rand() < 2),
+                      spark.table("tile_map_cache_tiles")):
+            assert lookup._tile_files(never) is None
+            s0 = _tile_map_stats()
+            for _ in range(2):
+                golden(enrich_points(pts, never))
+            assert _stats_delta(s0) == {"hits": 0, "misses": 2}
+            assert lookup._TILE_MAP_SLOT is kept
+    finally:
+        spark.sql("DROP TABLE IF EXISTS tile_map_cache_tiles")
 
 
 def test_lsh_bucket_cap_bounds_pathological_bucket(spark):
