@@ -136,31 +136,6 @@ def embedding_near_dup_pairs(emb: DataFrame, min_score: int,
             .filter(F.col("score") >= min_score))
 
 
-EXPR_MAX_CENTROIDS = 64
-
-
-def _centroid_structs(cents: list[tuple[int, list[int]]], vec: str) -> Column:
-    """(score, -cid) structs — linear-size expression tree (a when-chain
-    fold would duplicate subtrees exponentially and send Catalyst analysis
-    into minutes); struct ordering is lexicographic, so max picks the
-    highest score and, on ties, the LOWEST cid via the negated field.
-    Shared by ann_ivf_topk and semantic_dedup so the two assignment rules
-    (and their oracles) cannot drift.
-
-    ``vec`` is a COLUMN NAME: the k x dim term expression is built as ONE
-    SQL text parsed JVM-side — the r1-r7 Column-API form paid a py4j
-    round trip per term (~2·k·dim driver calls: measured 1.7-2.2 s of
-    pure driver build time at k=8, dim=64, r8 phase breakdown); the
-    parsed tree and types are identical (int literals, left-assoc sums),
-    so results are unchanged (oracle-pinned)."""
-    cands = []
-    for cid, cv in cents:
-        score = " + ".join(f"(element_at(`{vec}`, {i + 1}) * {int(c)})"
-                           for i, c in enumerate(cv))
-        cands.append(f"struct(({score}) AS s, {-cid} AS nc)")
-    return F.expr("array(" + ", ".join(cands) + ")")
-
-
 def semantic_dedup(emb: DataFrame, k: int = 8, iters: int = 2,
                    min_score: int = 1,
                    centroids: list[tuple[int, list[int]]] | None = None,
@@ -177,10 +152,12 @@ def semantic_dedup(emb: DataFrame, k: int = 8, iters: int = 2,
     within-cluster pairs — never all-pairs; pick k ~ corpus / target
     cluster size so the per-cluster quadratic term stays bounded (the
     SemDeDup recipe).  One shuffle for the cluster-keyed self-join plus
-    the O(rounds) component joins; the only Python is the (optional)
-    >64-centroid Arrow argmax.  Every step is integer-exact, so the
-    DuckDB oracle replays training, assignment, pairing, and the
-    transitive closure bit-for-bit.
+    the O(rounds) component joins; the only Python is the Arrow
+    centroid argmax (_centroid_probe_udf).  Every step is integer-exact,
+    so the DuckDB oracle replays training, assignment, pairing, and the
+    transitive closure bit-for-bit.  A NULL or wrong-length embedding
+    gets a NULL cid: it pairs with nothing and comes back as its own
+    surviving singleton component.
 
     ``max_cluster`` (VERDICT r6 task 5 — the lsh_candidate_pairs
     ``max_bucket`` precedent): "k ∝ corpus" is a convention, not a
@@ -260,14 +237,8 @@ def _assign_clusters(emb: DataFrame, k: int, iters: int,
     cents = sorted((int(c), [int(x) for x in v]) for c, v in centroids)
     base = emb.select(F.col(id_col).alias("vec_id"),
                       _quant(F.col(vec_col)).alias("v"))
-    if len(cents) <= EXPR_MAX_CENTROIDS:
-        return base.withColumn(
-            "cid", (-F.array_max(_centroid_structs(cents, "v"))["nc"])
-            .cast("long"))
-    spark = emb.sparkSession
-    assign1 = _centroid_probe_udf(spark, cents, 1)
-    return base.withColumn(
-        "cid", F.element_at(assign1(F.col("v")), 1).cast("long"))
+    assign1 = _centroid_probe_udf(emb.sparkSession, cents, 1)
+    return base.withColumn("cid", F.element_at(assign1(F.col("v")), 1))
 
 
 def semantic_oversize_clusters(emb: DataFrame, max_cluster: int,
@@ -286,8 +257,11 @@ def semantic_oversize_clusters(emb: DataFrame, max_cluster: int,
     identically — init is content-hash deterministic) so both sides see
     the same assignment."""
     assigned = _assign_clusters(emb, k, iters, centroids, id_col, vec_col)
+    # count(cid) is 0 for the NULL-cid group of rejected vectors, so it is
+    # never reported; a filter on cid would be pushed below the assignment
+    # and run the argmax UDF a second time
     return (assigned.groupBy("cid")
-            .agg(F.count(F.lit(1)).alias("n_members"),
+            .agg(F.count("cid").alias("n_members"),
                  F.min("vec_id").alias("representative"))
             .filter(F.col("n_members") > max_cluster))
 
@@ -301,7 +275,8 @@ def kmeans_centroids(emb: DataFrame, k: int, iters: int = 5,
       (partitioning-independent, rerun-stable — same scheme as
       operators/sampling.py), so runs are reproducible without RNG state;
     - assign: broadcast-matrix argmax (_centroid_probe_udf — the same
-      kernel the search path uses);
+      kernel search and SemDeDup use); a NULL or wrong-length vector gets
+      a NULL cid, never seeds a centroid and never enters the sums;
     - update: posexplode the vectors and average per (centroid, dim) — one
       map-side-combined aggregation, never collecting vectors; means are
       re-quantized to ints so every iteration (and the final search) stays
@@ -316,7 +291,7 @@ def kmeans_centroids(emb: DataFrame, k: int, iters: int = 5,
     # deterministic k-sample: smallest-k by md5(vec_id || salt) — a
     # distributed TakeOrdered (orderBy+limit), NOT a global window
     bucket = F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(salt)))
-    seed_rows = (base.withColumn("_b", bucket)
+    seed_rows = (base.filter(F.col("ev").isNotNull()).withColumn("_b", bucket)
                  .orderBy("_b", "vec_id").limit(k)
                  .select("vec_id", "ev").collect())
     cents = sorted((i, [int(x) for x in r["ev"]])
@@ -330,9 +305,10 @@ def kmeans_centroids(emb: DataFrame, k: int, iters: int = 5,
         # partitions x k x dim longs, NOT rows x dim exploded rows
         acc: dict[int, list] = {}
         for pdf in batches:
+            pdf = pdf[pdf["cid"].notna()]  # vectors the kernel rejected
             if not len(pdf):
                 continue
-            cids = pdf["cid"].to_numpy()
+            cids = pdf["cid"].to_numpy(dtype=np.int64)
             vecs = np.asarray(pdf["ev"].tolist(), dtype=np.int64)
             for cid in np.unique(cids):
                 m = cids == cid
@@ -346,12 +322,8 @@ def kmeans_centroids(emb: DataFrame, k: int, iters: int = 5,
             "n": [e[1] for e in acc.values()]})
 
     for _ in range(iters):
-        # assignment stays on the Arrow probe UDF at every k (r8,
-        # measured): the struct-array Column argmax was tried here and
-        # ran ~1 s SLOWER per semantic_dedup call in alternating A/Bs —
-        # the numpy matrix argmax beats codegen over a k x dim term
-        # expression, and the rows already cross into Python for the
-        # partial-sum mapInPandas anyway.
+        # the rows cross into Python for the partial sums anyway, so the
+        # numpy argmax costs no extra transport here
         assign1 = _centroid_probe_udf(spark, cents, 1)
         assigned = base.withColumn("cid", F.element_at(assign1(F.col("ev")), 1))
         parts = (assigned.select("cid", "ev")
@@ -648,12 +620,17 @@ def ann_pq_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
 
 
 def _centroid_probe_udf(spark, cents: list[tuple[int, list[int]]], nprobe: int):
-    """Arrow-vectorized top-``nprobe`` centroid assignment against a
-    broadcast integer centroid matrix — the scale path for k-means-realistic
-    centroid counts (thousands), where a per-centroid Catalyst expression
-    tree stops being viable (VERDICT r2 #4).  Semantics are identical to
-    the expression path: integer-dot argmax, ties to the LOWEST cid (cents
-    arrive cid-sorted; stable argsort preserves that on equal scores)."""
+    """The one centroid-assignment kernel (k-means training, IVF search,
+    SemDeDup): an Arrow-batched top-``nprobe`` argmax of integer dots
+    against a broadcast centroid matrix, plan size O(1) in centroid count.
+    Ties go to the LOWEST cid (cents arrive cid-sorted; the stable argsort
+    keeps that order on equal scores) — the oracles' ``ORDER BY s DESC,
+    cid ASC``.
+
+    Total over its input: a NULL vector, one whose length is not the
+    centroid dimension, or one with a NULL component gets a NULL cid list
+    (so it is never a candidate, a query match or a cluster member), and
+    an empty batch returns an empty result."""
     mat = np.asarray([cv for _, cv in cents], dtype=np.int64)
     ids = np.asarray([cid for cid, _ in cents], dtype=np.int64)
     bc = spark.sparkContext.broadcast((mat, ids))
@@ -661,10 +638,22 @@ def _centroid_probe_udf(spark, cents: list[tuple[int, list[int]]], nprobe: int):
     @F.pandas_udf("array<long>")
     def topn(ev: pd.Series) -> pd.Series:
         cmat, cids_ = bc.value
-        vecs = np.asarray(ev.tolist(), dtype=np.int64)
-        scores = vecs @ cmat.T
-        order = np.argsort(-scores, axis=1, kind="stable")[:, :nprobe]
-        return pd.Series(list(cids_[order]))
+        out = [None] * len(ev)
+        rows = [i for i, v in enumerate(ev)
+                if v is not None and len(v) == cmat.shape[1]]
+        if rows:
+            vecs = np.stack([ev.iat[i] for i in rows])
+            if vecs.dtype.kind == "f":
+                # Arrow hands a batch holding a NULL component over as
+                # float64 with NaN in its place
+                keep = ~np.isnan(vecs).any(axis=1)
+                rows = [i for i, ok in zip(rows, keep) if ok]
+                vecs = vecs[keep]
+            scores = vecs.astype(np.int64) @ cmat.T
+            order = np.argsort(-scores, axis=1, kind="stable")[:, :nprobe]
+            for i, top in zip(rows, cids_[order]):
+                out[i] = top
+        return pd.Series(out, dtype=object)
 
     return topn
 
@@ -684,11 +673,10 @@ def ann_ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
     nprobe is the standard IVF recall/cost dial: candidates grow ~linearly
     with probed lists; recall is measured vs brute force in tests.
 
-    Two physical centroid-assignment strategies, same semantics:
-    <= EXPR_MAX_CENTROIDS keeps a pure-JVM (score, -cid) struct-array
-    expression (whole-stage codegen, DuckDB-oracle-exact); above that, a
-    broadcast centroid matrix + one Arrow-batched argmax pandas UDF
-    (_centroid_probe_udf) keeps plan size O(1) in centroid count."""
+    Assignment and probing both run the one broadcast-matrix Arrow argmax
+    (_centroid_probe_udf), plan size O(1) in centroid count.  A vector
+    the kernel rejects (NULL or wrong length) lives in no inverted list,
+    and a query id holding one returns no rows."""
     if centroids is not None:
         # learned centroids (e.g. kmeans_centroids) — already quantized ints
         cents = sorted((int(c), [int(x) for x in v]) for c, v in centroids)
@@ -701,33 +689,18 @@ def ann_ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
         cents = sorted(((r["cid"], r["cv"]) for r in cents))
     base = emb.select(F.col(id_col).alias("vec_id"), _quant(F.col(vec_col)).alias("ev"))
 
-    if len(cents) <= EXPR_MAX_CENTROIDS:
-        assigned = base.withColumn(
-            "centroid", -F.array_max(_centroid_structs(cents, "ev"))["nc"])
-        q = assigned.filter(F.col("vec_id").isin(query_ids))
-        if nprobe <= 1:
-            q = q.select(F.col("vec_id").alias("qid"), F.col("ev").alias("qv"),
-                         F.col("centroid").alias("qcentroid"))
-        else:
-            # top-nprobe centroids per query: sort the (score, -cid) structs
-            # descending, take nprobe, explode — one probe row per (query, list)
-            probes = F.slice(F.reverse(F.array_sort(_centroid_structs(cents, "ev"))),
-                             1, nprobe)
-            q = (q.select(F.col("vec_id").alias("qid"), F.col("ev").alias("qv"),
-                          F.explode(probes).alias("_p"))
-                 .select("qid", "qv", (-F.col("_p")["nc"]).alias("qcentroid")))
+    spark = emb.sparkSession
+    assign1 = _centroid_probe_udf(spark, cents, 1)
+    assigned = base.withColumn("centroid", F.element_at(assign1(F.col("ev")), 1))
+    q = assigned.filter(F.col("vec_id").isin(query_ids))
+    if nprobe <= 1:
+        q = q.select(F.col("vec_id").alias("qid"), F.col("ev").alias("qv"),
+                     F.col("centroid").alias("qcentroid"))
     else:
-        assign1 = _centroid_probe_udf(emb.sparkSession, cents, 1)
-        assigned = base.withColumn(
-            "centroid", F.element_at(assign1(F.col("ev")), 1))
-        q = assigned.filter(F.col("vec_id").isin(query_ids))
-        if nprobe <= 1:
-            q = q.select(F.col("vec_id").alias("qid"), F.col("ev").alias("qv"),
-                         F.col("centroid").alias("qcentroid"))
-        else:
-            probe_n = _centroid_probe_udf(emb.sparkSession, cents, nprobe)
-            q = (q.select(F.col("vec_id").alias("qid"), F.col("ev").alias("qv"),
-                          F.explode(probe_n(F.col("ev"))).alias("qcentroid")))
+        # one probe row per (query, list); a NULL list explodes to none
+        probe_n = _centroid_probe_udf(spark, cents, nprobe)
+        q = q.select(F.col("vec_id").alias("qid"), F.col("ev").alias("qv"),
+                     F.explode(probe_n(F.col("ev"))).alias("qcentroid"))
     # a vector lives in exactly one inverted list, so probing several lists
     # never duplicates a (qid, vec_id) candidate — no distinct needed
     cand = (assigned.join(F.broadcast(q), F.col("centroid") == F.col("qcentroid"))

@@ -442,10 +442,11 @@ def test_polygon_oversize_report(spark):
 
 
 def test_ann_ivf_1024_centroids_udf_path(spark):
-    """VERDICT r2 #4: above EXPR_MAX_CENTROIDS the centroid assignment must
-    switch to the broadcast-matrix pandas-UDF argmax, keeping plan size O(1)
-    in centroid count.  Golden = numpy replication of the IVF semantics
-    (argmax assignment, lowest-cid ties, nprobe lists, exact rerank)."""
+    """VERDICT r2 #4: centroid assignment runs the broadcast-matrix
+    pandas-UDF argmax, keeping plan size O(1) in centroid count — at 1024
+    centroids and at 8 (the same one path).  Golden = numpy replication of
+    the IVF semantics (argmax assignment, lowest-cid ties, nprobe lists,
+    exact rerank)."""
     import numpy as np
 
     from elevation_service_spark.operators.similarity import (
@@ -480,6 +481,35 @@ def test_ann_ivf_1024_centroids_udf_path(spark):
         for rank, (neg, v) in enumerate(sorted(cand)[:k], 1):
             expected[(qid, rank)] = (v, -neg)
     assert got == expected
+
+    # 8 centroids (cids 0..7, passed unsorted), 2 and 6 with identical
+    # vectors: every vector nearest to that pair lands in list 2, and a
+    # query probing two lists probes both of them
+    n8 = 400
+    cmat8 = rng.integers(-1000, 1000, size=(8, dim))
+    cmat8[6] = cmat8[2]
+    order8 = np.argsort(-(qv[:n8] @ cmat8.T), axis=1, kind="stable")
+    assert (order8[:, 0] != 6).all()
+    tied = np.flatnonzero(order8[:, 0] == 2)
+    query_ids = [int(q) for q in tied[:3]] + [int(q) for q in
+                                              np.flatnonzero(order8[:, 0] != 2)[:2]]
+    assert len(query_ids) == 5
+    for nprobe in (1, 2):
+        out = ann_ivf_topk(emb.filter(F.col("vec_id") < n8), query_ids, k=k,
+                           centroids=[(c, cmat8[c].tolist()) for c in range(7, -1, -1)],
+                           nprobe=nprobe)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" in plan, "expected the pandas-UDF assign path"
+        got = {(r["qid"], r["rank"]): (r["vec_id"], r["score"])
+               for r in out.collect()}
+        expected = {}
+        for qid in query_ids:
+            probes = set(order8[qid, :nprobe].tolist())
+            cand = [(int(-(qv[qid] @ qv[v])), v) for v in range(n8)
+                    if v != qid and order8[v, 0] in probes]
+            for rank, (neg, v) in enumerate(sorted(cand)[:k], 1):
+                expected[(qid, rank)] = (v, -neg)
+        assert got == expected, nprobe
 
 
 def test_kmeans_centroids_learn_blobs_and_feed_ivf(spark):
@@ -754,9 +784,9 @@ def test_semantic_dedup_max_cluster_guard_on_skewed_clusters(spark):
 
 
 def test_semantic_dedup_arrow_assignment_path(spark):
-    """>64 centroids must route assignment through the broadcast-matrix
-    Arrow argmax and still match the expression path's integer semantics
-    (same struct/argmax tie-break: highest dot, lowest cid)."""
+    """SemDeDup assignment through the broadcast-matrix Arrow argmax
+    matches the numpy integer semantics (highest dot, lowest cid) at 65
+    and at 64 centroids."""
     import numpy as np
 
     from elevation_service_spark.operators.similarity import semantic_dedup
@@ -766,14 +796,9 @@ def test_semantic_dedup_arrow_assignment_path(spark):
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"]).cache()
     cents65 = [(c, [int(x) for x in rng.integers(-1000, 1000, 16)])
                for c in range(65)]
-    from elevation_service_spark.operators.similarity import EXPR_MAX_CENTROIDS
-    assert len(cents65) > EXPR_MAX_CENTROIDS  # routes via the Arrow argmax
-    # (the assignment runs inside a localCheckpoint, so the Arrow stage is
-    # not visible in the FINAL plan; the >64-centroid ArrowEvalPython plan
-    # shape itself is pinned by the ann_ivf 1024-centroid test)
     got = semantic_dedup(emb, min_score=10_000_000, centroids=cents65)
-    # expression path on the FIRST 64 centroids must agree wherever the
-    # 65th centroid wins nothing
+    # the FIRST 64 centroids must agree wherever the 65th centroid wins
+    # nothing
     got64 = {r["vec_id"]: r["cid"] for r in semantic_dedup(
         emb, min_score=10_000_000, centroids=cents65[:64]).collect()}
     g = {r["vec_id"]: r["cid"] for r in got.collect()}
@@ -787,6 +812,55 @@ def test_semantic_dedup_arrow_assignment_path(spark):
         if exp != 64:
             assert got64[i] == exp, i
     emb.unpersist()
+
+
+def test_centroid_assignment_total_over_bad_vectors(spark):
+    """The one assignment kernel is total: a NULL embedding, a 2-element
+    one and one with a NULL component get a NULL cid (never a candidate,
+    a query match or a cluster member), a bad query id returns no rows,
+    and every clean row's output equals its output on the clean frame —
+    for IVF search at nprobe 1 and 2, SemDeDup and its oversize report
+    with given centroids, and k-means training (kmeans_centroids, and
+    SemDeDup without centroids) on the clean rows plus the NULL row."""
+    from elevation_service_spark.operators.similarity import (
+        ann_ivf_topk, kmeans_centroids, semantic_dedup,
+        semantic_oversize_clusters)
+
+    rng = np.random.default_rng(17)
+    rows = [(i, [float(x) for x in rng.normal(0, 1, 8)]) for i in range(60)]
+    null_row = (100, None)
+    bad = [null_row, (101, [0.5, -0.5]), (102, [1.0, None] + [0.25] * 6)]
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(rows, schema)
+    dirty = spark.createDataFrame(rows + bad, schema)
+    with_null = spark.createDataFrame(rows + [null_row], schema)
+    bad_ids = [i for i, _ in bad]
+    cents = [(c, rng.integers(-1000, 1000, 8).tolist()) for c in range(5)]
+
+    def ivf(emb, qids, nprobe):
+        return sorted(ann_ivf_topk(emb, qids, k=4, centroids=cents,
+                                   nprobe=nprobe).collect())
+
+    for nprobe in (1, 2):
+        got = ivf(dirty, [3, 40] + bad_ids, nprobe)
+        assert got == ivf(clean, [3, 40], nprobe), nprobe
+
+    def dedup(emb, centroids):
+        return {r["vec_id"]: r.asDict() for r in semantic_dedup(
+            emb, k=4, min_score=1_000_000, centroids=centroids).collect()}
+
+    for emb, ids, centroids in ((dirty, bad_ids, cents),
+                                (with_null, [100], None)):
+        got = dedup(emb, centroids)
+        for i in ids:
+            assert got.pop(i) == {"vec_id": i, "cid": None, "component": i,
+                                  "is_survivor": True}
+        assert got == dedup(clean, centroids)
+    report = [sorted(semantic_oversize_clusters(emb, 0, centroids=cents).collect())
+              for emb in (dirty, clean)]
+    assert report[0] == report[1]
+    assert kmeans_centroids(with_null, 4, iters=2) == \
+        kmeans_centroids(clean, 4, iters=2)
 
 
 def test_polygon_stats_fixture_exact(spark):
