@@ -28,6 +28,11 @@ def _quant(col: Column) -> Column:
     return F.transform(col, lambda x: F.floor(x.cast("double") * QUANT_SCALE + F.lit(0.5)).cast("long"))
 
 
+def _no_null_component(vec: Column) -> Column:
+    """True for a vector that is not NULL and holds no NULL component."""
+    return F.forall(vec, lambda x: x.isNotNull())
+
+
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
                        F.lit(0).cast("long"), lambda acc, x: acc + x)
@@ -258,8 +263,7 @@ def semantic_oversize_clusters(emb: DataFrame, max_cluster: int,
     the same assignment."""
     assigned = _assign_clusters(emb, k, iters, centroids, id_col, vec_col)
     # count(cid) is 0 for the NULL-cid group of rejected vectors, so it is
-    # never reported; a filter on cid would be pushed below the assignment
-    # and run the argmax UDF a second time
+    # never reported
     return (assigned.groupBy("cid")
             .agg(F.count("cid").alias("n_members"),
                  F.min("vec_id").alias("representative"))
@@ -275,8 +279,9 @@ def kmeans_centroids(emb: DataFrame, k: int, iters: int = 5,
       (partitioning-independent, rerun-stable — same scheme as
       operators/sampling.py), so runs are reproducible without RNG state;
     - assign: broadcast-matrix argmax (_centroid_probe_udf — the same
-      kernel search and SemDeDup use); a NULL or wrong-length vector gets
-      a NULL cid, never seeds a centroid and never enters the sums;
+      kernel search and SemDeDup use); a NULL, NULL-component or
+      wrong-length vector gets a NULL cid, never seeds a centroid and
+      never enters the sums;
     - update: posexplode the vectors and average per (centroid, dim) — one
       map-side-combined aggregation, never collecting vectors; means are
       re-quantized to ints so every iteration (and the final search) stays
@@ -291,12 +296,12 @@ def kmeans_centroids(emb: DataFrame, k: int, iters: int = 5,
     # deterministic k-sample: smallest-k by md5(vec_id || salt) — a
     # distributed TakeOrdered (orderBy+limit), NOT a global window
     bucket = F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(salt)))
-    seed_rows = (base.filter(F.col("ev").isNotNull()).withColumn("_b", bucket)
+    seed_rows = (base.filter(_no_null_component(F.col("ev"))).withColumn("_b", bucket)
                  .orderBy("_b", "vec_id").limit(k)
                  .select("vec_id", "ev").collect())
-    cents = sorted((i, [int(x) for x in r["ev"]])
-                   for i, r in enumerate(sorted(seed_rows,
-                                                key=lambda r: r["vec_id"])))
+    seeds = _centroid_rows(sorted(((r["vec_id"], r["ev"]) for r in seed_rows),
+                                  key=lambda r: r[0]))
+    cents = [(i, [int(x) for x in v]) for i, (_, v) in enumerate(seeds)]
     spark = emb.sparkSession
 
     def partial_sums(batches):
@@ -361,6 +366,8 @@ def pq_train(emb: DataFrame, m: int = PQ_M, k: int = PQ_K, iters: int = 2,
 
     - init: the same deterministic md5-smallest-k corpus sample as
       kmeans_centroids, sliced per subspace (code id = seed's vec_id rank);
+      a NULL, NULL-component or wrong-length vector never seeds a code and
+      never enters the sums;
     - assign: L2 argmin per subspace (ties -> lowest code) via one
       Arrow-batched UDF against the broadcast codebook tensor;
     - update: per-partition numpy partial sums -> integer means
@@ -373,17 +380,18 @@ def pq_train(emb: DataFrame, m: int = PQ_M, k: int = PQ_K, iters: int = 2,
     base = (emb.select(F.col(id_col).alias("vec_id"),
                        _quant(F.col(vec_col)).alias("ev")))
     bucket = F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(salt)))
-    seed_rows = (base.withColumn("_b", bucket)
+    seed_rows = (base.filter(_no_null_component(F.col("ev"))).withColumn("_b", bucket)
                  .orderBy("_b", "vec_id").limit(k)
                  .select("vec_id", "ev").collect())
-    if not seed_rows:
+    seeds = [v for _, v in _centroid_rows(sorted(
+        ((r["vec_id"], r["ev"]) for r in seed_rows), key=lambda r: r[0]))]
+    if not seeds:
         raise ValueError("pq_train: empty embeddings table")
     # dim comes free from the seed collect — no extra full-corpus scan
-    dim = len(seed_rows[0]["ev"])
+    dim = len(seeds[0])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     d_sub = dim // m
-    seeds = [r["ev"] for r in sorted(seed_rows, key=lambda r: r["vec_id"])]
     cbs = [[(c, [int(x) for x in sv[mm * d_sub:(mm + 1) * d_sub]])
             for c, sv in enumerate(seeds)] for mm in range(m)]
     spark = emb.sparkSession
@@ -393,9 +401,9 @@ def pq_train(emb: DataFrame, m: int = PQ_M, k: int = PQ_K, iters: int = 2,
             # per-partition sums: at most m*k rows of (m, code, sum-vec, n)
             acc: dict[tuple[int, int], list] = {}
             for pdf in batches:
-                if not len(pdf):
+                rows, X = _accepted_vectors(pdf["ev"], dim)
+                if not rows:
                     continue
-                X = np.asarray(pdf["ev"].tolist(), dtype=np.int64)
                 codes = _pq_codes(X, mats)
                 for mm in range(mats.shape[0]):
                     sub = X[:, mm * d_sub:(mm + 1) * d_sub]
@@ -447,20 +455,21 @@ def _pq_codes(X: np.ndarray, mats: np.ndarray) -> np.ndarray:
 def pq_encode(emb: DataFrame, codebooks, id_col: str = "vec_id",
               vec_col: str = "embedding") -> DataFrame:
     """(vec_id, ev, codes) — each vector compressed to m small ints (the
-    5-12x storage cut PQ exists for); ONE Arrow-batched pass, no shuffle."""
+    5-12x storage cut PQ exists for); ONE Arrow-batched pass, no shuffle.
+    A NULL, NULL-component or wrong-length vector gets NULL codes."""
     mats = np.asarray([[cv for _, cv in cb] for cb in codebooks],
                       dtype=np.int64)
+    dim = mats.shape[0] * mats.shape[2]
     bc = emb.sparkSession.sparkContext.broadcast(mats)
 
     @F.pandas_udf("array<int>")
     def codes_udf(ev: pd.Series) -> pd.Series:
-        if not len(ev):
-            # np.asarray([]) is 1-D (0,) and the 2-D slice in _pq_codes
-            # would raise IndexError (ADVICE r4) — mirror pq_train's
-            # empty-partition guard
-            return pd.Series([], dtype=object)
-        X = np.asarray(ev.tolist(), dtype=np.int64)
-        return pd.Series(list(_pq_codes(X, bc.value)))
+        out = [None] * len(ev)
+        rows, X = _accepted_vectors(ev, dim)
+        if rows:
+            for i, c in zip(rows, _pq_codes(X, bc.value)):
+                out[i] = c
+        return pd.Series(out, dtype=object)
 
     return (emb.select(F.col(id_col).alias("vec_id"),
                        _quant(F.col(vec_col)).alias("ev"))
@@ -497,7 +506,10 @@ def ann_pq_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
         codebooks = pq_train(emb, id_col=id_col, vec_col=vec_col)
     m = len(codebooks)
     d_sub = len(codebooks[0][0][1])
-    enc = pq_encode(emb, codebooks, id_col, vec_col)
+    # a vector the encoder rejects is no candidate and no query; the JVM
+    # filter runs below the encode, so such rows never reach Python
+    enc = pq_encode(emb, codebooks, id_col, vec_col).filter(
+        (F.size("ev") == m * d_sub) & _no_null_component(F.col("ev")))
     qids = sorted(int(q) for q in query_ids)
     qrows = {r["vec_id"]: r["ev"]
              for r in enc.filter(F.col("vec_id").isin(qids))
@@ -619,6 +631,36 @@ def ann_pq_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
                     "vec_id", "score"))
 
 
+def _centroid_rows(rows):
+    """The centroid rows the assignment kernel can use, in their order: a
+    NULL vector, one with a NULL component, or one whose length is not
+    the length most rows share (ties to the earliest) is dropped — the
+    kernel's NULL-cid rule, applied to a centroid source."""
+    rows = [(c, v) for c, v in rows if v is not None and None not in v]
+    if rows:
+        lengths = [len(v) for _, v in rows]
+        dim = max(lengths, key=lengths.count)
+        rows = [(c, v) for c, v in rows if len(v) == dim]
+    return rows
+
+
+def _accepted_vectors(ev: pd.Series, dim: int) -> tuple[list[int], np.ndarray]:
+    """(positions, int64 matrix) of the vectors in an Arrow batch that are
+    not NULL, hold ``dim`` components and no NULL one; every Python stage
+    that reads embeddings skips the rest."""
+    rows = [i for i, v in enumerate(ev) if v is not None and len(v) == dim]
+    if not rows:
+        return rows, np.zeros((0, max(dim, 0)), np.int64)
+    vecs = np.stack([ev.iat[i] for i in rows])
+    if vecs.dtype.kind == "f":
+        # Arrow hands a batch holding a NULL component over as float64
+        # with NaN in its place
+        keep = ~np.isnan(vecs).any(axis=1)
+        rows = [i for i, ok in zip(rows, keep) if ok]
+        vecs = vecs[keep]
+    return rows, vecs.astype(np.int64)
+
+
 def _centroid_probe_udf(spark, cents: list[tuple[int, list[int]]], nprobe: int):
     """The one centroid-assignment kernel (k-means training, IVF search,
     SemDeDup): an Arrow-batched top-``nprobe`` argmax of integer dots
@@ -627,10 +669,17 @@ def _centroid_probe_udf(spark, cents: list[tuple[int, list[int]]], nprobe: int):
     keeps that order on equal scores) — the oracles' ``ORDER BY s DESC,
     cid ASC``.
 
-    Total over its input: a NULL vector, one whose length is not the
-    centroid dimension, or one with a NULL component gets a NULL cid list
-    (so it is never a candidate, a query match or a cluster member), and
-    an empty batch returns an empty result."""
+    Total over its input: a centroid row _centroid_rows rejects is not
+    used; a NULL vector, one whose length is not the centroid dimension,
+    or one with a NULL component gets a NULL cid list (so it is never a
+    candidate, a query match or a cluster member), and an empty batch
+    returns an empty result.
+
+    The UDF is marked nondeterministic so that no filter on its output is
+    pushed below it: a join's inferred ``isnotnull(cid)`` filter would
+    otherwise run the argmax over every row a second time."""
+    cents = _centroid_rows(cents)
+    dim = len(cents[0][1]) if cents else -1  # no centroid: all rejected
     mat = np.asarray([cv for _, cv in cents], dtype=np.int64)
     ids = np.asarray([cid for cid, _ in cents], dtype=np.int64)
     bc = spark.sparkContext.broadcast((mat, ids))
@@ -639,23 +688,14 @@ def _centroid_probe_udf(spark, cents: list[tuple[int, list[int]]], nprobe: int):
     def topn(ev: pd.Series) -> pd.Series:
         cmat, cids_ = bc.value
         out = [None] * len(ev)
-        rows = [i for i, v in enumerate(ev)
-                if v is not None and len(v) == cmat.shape[1]]
+        rows, vecs = _accepted_vectors(ev, dim)
         if rows:
-            vecs = np.stack([ev.iat[i] for i in rows])
-            if vecs.dtype.kind == "f":
-                # Arrow hands a batch holding a NULL component over as
-                # float64 with NaN in its place
-                keep = ~np.isnan(vecs).any(axis=1)
-                rows = [i for i, ok in zip(rows, keep) if ok]
-                vecs = vecs[keep]
-            scores = vecs.astype(np.int64) @ cmat.T
-            order = np.argsort(-scores, axis=1, kind="stable")[:, :nprobe]
+            order = np.argsort(-(vecs @ cmat.T), axis=1, kind="stable")[:, :nprobe]
             for i, top in zip(rows, cids_[order]):
                 out[i] = top
         return pd.Series(out, dtype=object)
 
-    return topn
+    return topn.asNondeterministic()
 
 
 def ann_ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
@@ -686,21 +726,22 @@ def ann_ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
                  .select(F.col(id_col).alias("cid"),
                          _quant(F.col(vec_col)).alias("cv"))
                  .collect())
-        cents = sorted(((r["cid"], r["cv"]) for r in cents))
+        cents = sorted(((r["cid"], r["cv"]) for r in cents), key=lambda c: c[0])
     base = emb.select(F.col(id_col).alias("vec_id"), _quant(F.col(vec_col)).alias("ev"))
 
     spark = emb.sparkSession
     assign1 = _centroid_probe_udf(spark, cents, 1)
     assigned = base.withColumn("centroid", F.element_at(assign1(F.col("ev")), 1))
-    q = assigned.filter(F.col("vec_id").isin(query_ids))
+    # the query side probes from base: a filter over `assigned` would stay
+    # above the (nondeterministic) argmax and run it over the corpus again
     if nprobe <= 1:
-        q = q.select(F.col("vec_id").alias("qid"), F.col("ev").alias("qv"),
-                     F.col("centroid").alias("qcentroid"))
+        probe = F.element_at(assign1(F.col("ev")), 1)
     else:
         # one probe row per (query, list); a NULL list explodes to none
-        probe_n = _centroid_probe_udf(spark, cents, nprobe)
-        q = q.select(F.col("vec_id").alias("qid"), F.col("ev").alias("qv"),
-                     F.explode(probe_n(F.col("ev"))).alias("qcentroid"))
+        probe = F.explode(_centroid_probe_udf(spark, cents, nprobe)(F.col("ev")))
+    q = (base.filter(F.col("vec_id").isin(query_ids))
+         .select(F.col("vec_id").alias("qid"), F.col("ev").alias("qv"),
+                 probe.alias("qcentroid")))
     # a vector lives in exactly one inverted list, so probing several lists
     # never duplicates a (qid, vec_id) candidate — no distinct needed
     cand = (assigned.join(F.broadcast(q), F.col("centroid") == F.col("qcentroid"))

@@ -863,6 +863,93 @@ def test_centroid_assignment_total_over_bad_vectors(spark):
         kmeans_centroids(clean, 4, iters=2)
 
 
+def _python_rows_received(df) -> list[int]:
+    """Rows each ArrowEvalPython node of df's executed plan sent back
+    (read after an action on df)."""
+    got = []
+    for node, name in _walk_exec(df._jdf.queryExecution().executedPlan()):
+        if name == "ArrowEvalPythonExec":
+            it = node.metrics().iterator()
+            while it.hasNext():
+                kv = it.next()
+                if kv._1() == "pythonNumRowsReceived":
+                    got.append(kv._2().value())
+    return got
+
+
+def test_ann_ivf_one_python_pass_per_join_side(spark):
+    """The corpus crosses into Python once per ann_ivf_topk call and the
+    query side only with the query rows: the join's inferred
+    isnotnull(centroid) filter must not run the argmax a second time."""
+    from elevation_service_spark.operators.similarity import ann_ivf_topk
+
+    rng = np.random.default_rng(17)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(0, 1, 8)]) for i in range(62)],
+        "vec_id long, embedding array<double>")
+    for nprobe in (1, 2):
+        out = ann_ivf_topk(emb, [3, 40], k=4, centroid_ids=[1, 5, 9],
+                           nprobe=nprobe)
+        assert len(out.collect()) == 8
+        assert sorted(_python_rows_received(out)) == [2, 62], nprobe
+
+
+def test_centroid_sources_total_over_bad_vectors(spark):
+    """A NULL, short or NULL-component row named in centroid_ids= or drawn
+    as a k-means seed is dropped from the centroid set instead of making
+    the centroid matrix ragged on the driver; the clean rows' output is
+    unchanged, and a centroid set with no usable row returns no rows."""
+    from elevation_service_spark.operators.similarity import (
+        ann_ivf_topk, kmeans_centroids)
+
+    rng = np.random.default_rng(23)
+    rows = [(i, [float(x) for x in rng.normal(0, 1, 8)]) for i in range(60)]
+    bad = [(100, None), (101, [0.5, -0.5]), (102, [1.0, None] + [0.25] * 6)]
+    bad_ids = [i for i, _ in bad]
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(rows, schema)
+    dirty = spark.createDataFrame(rows + bad, schema)
+    for nprobe in (1, 2):
+        got = sorted(ann_ivf_topk(dirty, [3, 40], k=4, nprobe=nprobe,
+                                  centroid_ids=[5, 17, 33] + bad_ids).collect())
+        assert got and got == sorted(ann_ivf_topk(
+            clean, [3, 40], k=4, nprobe=nprobe,
+            centroid_ids=[5, 17, 33]).collect()), nprobe
+    assert ann_ivf_topk(dirty, [3, 40], k=4, centroid_ids=[100, 102]).collect() == []
+    # k covers every row, so all three bad rows are candidate seeds
+    assert kmeans_centroids(dirty, 63, iters=2) == kmeans_centroids(clean, 60, iters=2)
+
+
+def test_ann_pq_total_over_bad_vectors(spark):
+    """PQ training skips a NULL, short or NULL-component vector in its
+    seeds and partial sums, the encoder gives it NULL codes, and
+    ann_pq_topk treats it as no candidate and no query."""
+    from elevation_service_spark.operators.similarity import (
+        ann_pq_topk, pq_encode, pq_train)
+
+    rng = np.random.default_rng(29)
+    rows = [(i, [float(x) for x in rng.normal(0, 1, 8)]) for i in range(80)]
+    bad = [(100, None), (101, [0.5, -0.5]), (102, [1.0, None] + [0.25] * 6)]
+    bad_ids = [i for i, _ in bad]
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(rows, schema)
+    dirty = spark.createDataFrame(rows + bad, schema)
+    with_null = spark.createDataFrame(rows + bad[:1], schema)
+    assert pq_train(with_null, iters=2) == pq_train(clean, iters=2)
+    cbs = pq_train(dirty, iters=2)
+    assert all(len(cv) == 2 for cb in cbs for _, cv in cb)
+    codes = {r["vec_id"]: r["codes"]
+             for r in pq_encode(dirty, cbs).collect()}
+    assert [codes[i] for i in bad_ids] == [None] * 3
+    assert all(len(codes[i]) == 4 for i, _ in rows)
+    got = sorted(ann_pq_topk(dirty, [3, 40] + bad_ids, k=4).collect())
+    assert len(got) == 8
+    for kw in ({}, {"rerank": 8}):
+        assert sorted(ann_pq_topk(dirty, [3, 40] + bad_ids, k=4, codebooks=cbs,
+                                  **kw).collect()) == \
+            sorted(ann_pq_topk(clean, [3, 40], k=4, codebooks=cbs, **kw).collect())
+
+
 def test_polygon_stats_fixture_exact(spark):
     """Hand-computed shoelace integers on the fixture set: hole subtraction
     (holed), non-rectangular edges (tri), and a MultiPolygon doc."""
