@@ -240,43 +240,23 @@ def reassemble_geojson(docs: DataFrame, enriched: DataFrame,
     return joined.mapInPandas(gen, _DOC_OUT_SCHEMA)
 
 
-def add_elevation_docs_fused(docs: DataFrame, tiles: DataFrame, *,
-                             interpolation: str = "bilinear",
-                             url_col: str = "url", geojson_col: str = "geojson",
-                             max_doc_bytes: int = DEFAULT_MAX_DOC_BYTES,
-                             broadcast_bytes_threshold: int = 512 << 20) -> DataFrame:
-    """Single-pass POST /geojson: ONE mapInPandas walks, enriches (broadcast
-    tile map + the same batch lookup as enrich_points' broadcast
-    strategy), and rewrites each document in place — one JSON
+def _fused_pass(docs: DataFrame, bc: Broadcast, interpolation: str,
+                max_doc_bytes: int) -> DataFrame:
+    """Single-pass POST /geojson over the broadcast tile map: ONE
+    mapInPandas walks, enriches (the same batch lookup as enrich_points'
+    broadcast strategy) and rewrites each document in place — one JSON
     parse + one dump per doc, ZERO shuffle, and the document string
     crosses the Arrow boundary once each way (the flatten→enrich→reassemble
     pipeline parses twice and ships the doc text in twice).  Output rows,
-    statuses, and elevation values are identical to add_elevation_docs
-    (same parse, same kernel, same write-back).
-
-    The needed-tile working set is only knowable by PARSING the docs (the
-    very pass fusion eliminates), so this path broadcasts the WHOLE tile
-    table — guarded by ``broadcast_bytes_threshold`` (ADVICE r3: an
-    unguarded collect here OOMs the driver on a large tile table).  Callers
-    go through add_elevation_docs, which falls back to the
-    flatten→enrich→reassemble pipeline (which CAN left-semi-prune tiles)
-    when the table is too big; a direct oversize call raises."""
-    sz, _, bc = _broadcast_tiles(tiles, threshold=broadcast_bytes_threshold)
-    if bc is None:
-        raise ValueError(f"tile table is {sz} bytes > broadcast threshold "
-                         f"{broadcast_bytes_threshold}; the fused pass cannot prune "
-                         "tiles — add_elevation_docs prunes to the docs' tiles")
-    return _fused_pass(docs, bc, interpolation, url_col, geojson_col, max_doc_bytes)
-
-
-def _fused_pass(docs: DataFrame, bc: Broadcast, interpolation: str,
-                url_col: str, geojson_col: str, max_doc_bytes: int) -> DataFrame:
-    """add_elevation_docs_fused's map-only plan over the broadcast tile map."""
+    statuses and elevations are identical to the pipeline's (same parse,
+    same kernel, same write-back).  The docs' tiles are only knowable by
+    parsing them, so the map holds the WHOLE tile table: add_elevation_docs
+    builds it only under its broadcast threshold."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tile_map = bc.value
         for pdf in batches:
-            parsed, counts, lat, lon = _parse_batch(pdf[geojson_col], max_doc_bytes)
+            parsed, counts, lat, lon = _parse_batch(pdf["geojson"], max_doc_bytes)
             elev, _ = _lookup_batch(tile_map, lat, lon, interpolation)
             yield _doc_frame(pdf["url"], parsed, np.split(elev, np.cumsum(counts)[:-1]))
 
@@ -286,8 +266,7 @@ def _fused_pass(docs: DataFrame, bc: Broadcast, interpolation: str,
     # tile into its own cache (measured 3-5x slower end-to-end than letting
     # one warm worker stream through it).  Callers with a genuinely large
     # single-file input should .repartition() before calling.
-    return (docs.select(F.col(url_col).alias("url"), geojson_col)
-            .mapInPandas(gen, _DOC_OUT_SCHEMA))
+    return docs.select("url", "geojson").mapInPandas(gen, _DOC_OUT_SCHEMA)
 
 
 def add_elevation_docs(docs: DataFrame, tiles: DataFrame, *,
@@ -298,18 +277,17 @@ def add_elevation_docs(docs: DataFrame, tiles: DataFrame, *,
     """The full POST /geojson equivalent.  Returns (url, geojson_out,
     n_positions, n_enriched, status).
 
-    strategy="fused" runs the single-pass map-only form
-    (add_elevation_docs_fused) when the WHOLE tile table fits the broadcast
-    threshold, falling back to the pipeline otherwise (the fused pass
-    cannot prune tiles — ADVICE r3); "auto" makes the same size-probed
-    choice, routing small tile tables through the fused form and large
-    ones through the pipeline with enrich_points' own auto
-    broadcast/cogroup pick; "broadcast" / "cogroup" force the flatten →
+    strategy="fused" runs the single-pass map-only form (_fused_pass)
+    when the WHOLE tile table fits the broadcast threshold, falling back
+    to the pipeline otherwise (the fused pass cannot prune tiles — ADVICE
+    r3); "auto" makes the same size-probed choice, routing small tile
+    tables through the fused form and large ones through the pipeline
+    with enrich_points' own auto broadcast/cogroup pick; "broadcast" / "cogroup" force the flatten →
     enrich → re-assemble pipeline with that kernel-join strategy."""
     if strategy in ("fused", "auto"):
-        sz, _, bc = _broadcast_tiles(tiles, threshold=broadcast_bytes_threshold)
+        sz, bc = _broadcast_tiles(tiles, threshold=broadcast_bytes_threshold)
         if bc is not None:
-            return _fused_pass(docs, bc, interpolation, "url", "geojson", max_doc_bytes)
+            return _fused_pass(docs, bc, interpolation, max_doc_bytes)
         if strategy == "fused":
             # the caller asked for the map-only single-pass plan by name;
             # the fallback is a materially different plan (shuffling,

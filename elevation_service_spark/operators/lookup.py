@@ -11,10 +11,11 @@ Two physical strategies, chosen for the 100 TB case:
   a query touches a bounded region), ship the tile bytes to every worker
   once (``_broadcast_tiles``, which keeps the last built broadcast)
   and enrich with a scalar ``pandas_udf`` over (lat, lon).  **Zero
-  shuffle of the points table** — at 100 TB of pages this is the
-  difference between a map-only job and a full-table shuffle.  The
-  reference's LRU tile cache (tileset.js § TileSet, TILE_SET_CACHE=128)
-  reappears as that kept broadcast and a per-worker decoded-grid LRU.
+  shuffle of the points table**, whatever the tiles' encodings — at
+  100 TB of pages this is the difference between a map-only job and a
+  full-table shuffle.  The reference's LRU tile cache (tileset.js §
+  TileSet, TILE_SET_CACHE=128) reappears as that kept broadcast and a
+  per-worker decoded-grid LRU.
 
 - ``cogroup``: when the tile working set is too big to broadcast, shuffle
   both sides by tile_key and run the kernel per cogroup.  The tile blob
@@ -41,7 +42,6 @@ from pyspark.sql import types as T
 
 from .. import kernels
 from ..functions.keys import skadi_key_col
-from .spread import few_input_splits
 
 STATUS_OK = "OK"
 STATUS_OUT_OF_BOUNDS = "OUT_OF_BOUNDS"
@@ -205,13 +205,13 @@ def _tile_files(tiles: DataFrame) -> tuple | None:
 
 
 def _broadcast_tiles(tiles: DataFrame, points: DataFrame | None = None,
-                     threshold: int | None = None) -> tuple[int | None, tuple, Broadcast | None]:
+                     threshold: int | None = None) -> tuple[int | None, Broadcast | None]:
     """The one broadcast-or-spill decision of every lookup entry point:
-    (working-set bytes, its encodings, Broadcast of the tile map: packed
-    tile id -> (sw_lat, sw_lon, encoding, data)), the Broadcast None
-    (spill) past ``threshold``.  The working set is the tiles of the
-    points' distinct tile keys that the table holds (so the driver never
-    holds more keys than the table has), or the whole table.  With a
+    (working-set bytes, Broadcast of the tile map: packed tile id ->
+    (sw_lat, sw_lon, encoding, data)), the Broadcast None (spill) past
+    ``threshold``.  The working set is the tiles of the points' distinct
+    tile keys that the table holds (so the driver never holds more keys
+    than the table has), or the whole table.  With a
     threshold, _TILE_MAP_SLOT serves while the app, the file listing, the
     plan (``sameSemantics``) and the keys match; a miss runs one
     length(data) query, then under the threshold one Arrow fetch and a
@@ -231,22 +231,21 @@ def _broadcast_tiles(tiles: DataFrame, points: DataFrame | None = None,
             F.col("tile_key").isin(table_keys)).distinct().collect())
     if slot and keys == slot["keys"]:
         _TILE_MAP_STATS["hits"] += 1
-        return slot["size"], slot["encodings"], slot["bc"] if slot["size"] <= threshold else None
+        return slot["size"], slot["bc"] if slot["size"] <= threshold else None
     needed = tiles if keys is None else tiles.filter(F.col("tile_key").isin(sorted(keys)))
     if threshold is not None:
         _TILE_MAP_STATS["misses"] += 1
         size = sum(r[0] or 0 for r in needed.select(F.length("data")).collect())
         if size > threshold:
-            return size, (), None
+            return size, None
     t = needed.select("sw_lat", "sw_lon", "encoding", "data").toArrow()
     ids = _tile_ids(*(t[c].to_numpy().astype(np.float64) for c in ("sw_lat", "sw_lon")))
     tile_map = dict(zip(ids.tolist(), zip(*(c.to_pylist() for c in t.columns))))
-    encodings, bc = tuple(v[2] for v in tile_map.values()), sc.broadcast(tile_map)
+    bc = sc.broadcast(tile_map)
     if files is not None:
         _TILE_MAP_SLOT = dict(app=sc.applicationId, files=files, tiles=tiles,
-                              table_keys=table_keys, keys=keys, size=size,
-                              encodings=encodings, bc=bc)
-    return size, encodings, bc
+                              table_keys=table_keys, keys=keys, size=size, bc=bc)
+    return size, bc
 
 
 def _lookup_batch(tile_map: dict, lat: np.ndarray, lon: np.ndarray,
@@ -275,24 +274,15 @@ def enrich_points(points: DataFrame, tiles: DataFrame, *,
                   salt_factor: int | None = None,
                   broadcast_bytes_threshold: int = 512 << 20,
                   prune_tiles: bool = True,
-                  cache_metrics: dict | None = None,
-                  partition_by_key: bool | None = None) -> DataFrame:
+                  cache_metrics: dict | None = None) -> DataFrame:
     """Add (tile_key, elevation, status) to a points DataFrame.
 
     points: any schema containing lat:double, lon:double.
     tiles:  TILES_SCHEMA (sources/tiles.py).
 
-    partition_by_key=True hash-partitions the points on tile_key before the
-    broadcast kernel: each worker then decodes ONLY its own tiles, so decode
-    wall-clock parallelizes across distinct tiles WITHOUT the per-worker
-    cache duplication a round-robin spread causes (every worker decoding
-    every tile was measured 3-5x slower).  Costs one shuffle of the points;
-    worth it when expensive decodes (terrarium PNG) dominate and the input
-    arrives in few splits.  The default (None = auto, VERDICT r3 #4)
-    enables it exactly then: the broadcast path turns it on when the
-    MAJORITY of working-set tiles need an expensive decode (not hgt /
-    hgt.gz) AND the points arrive in fewer splits than workers; cheap-decode
-    (HGT) plans stay map-only.  False forces the map-only plan."""
+    The broadcast plan is map-only whatever the tiles' encodings: the
+    points keep the scan's partitioning and each worker decodes the tiles
+    its own rows touch."""
     clash = {"elevation", "status"} & set(points.columns)
     if clash:
         # fail fast and identically for BOTH strategies: both write these
@@ -307,25 +297,14 @@ def enrich_points(points: DataFrame, tiles: DataFrame, *,
         # stream-composable)
         if strategy == "cogroup":
             raise ValueError("cogroup strategy is not supported on streaming points")
-        strategy, prune_tiles, partition_by_key = "broadcast", False, False
-    if partition_by_key is True:
-        points = points.repartition(F.col("tile_key"))
+        strategy, prune_tiles = "broadcast", False
     if strategy in ("auto", "broadcast"):
-        _, encodings, bc = _broadcast_tiles(
+        _, bc = _broadcast_tiles(
             tiles, points if prune_tiles else None,
             broadcast_bytes_threshold if strategy == "auto" else None)
         if bc is not None:
-            # auto partition_by_key (docstring): most working-set tiles need
-            # an expensive decode and the scan undersupplies parallelism
-            n_exp = sum(1 for e in encodings if e not in _CHEAP_DECODE)
-            if (partition_by_key is None and 2 * n_exp > len(encodings)
-                    and few_input_splits(points, points.sparkSession)):
-                points = points.repartition(F.col("tile_key"))
             return _enrich_broadcast(points, bc, interpolation, cache_metrics)
     return _enrich_cogroup(points, tiles, interpolation, salt_factor)
-
-
-_CHEAP_DECODE = ("hgt", "hgt.gz")
 
 
 def _enrich_broadcast(points: DataFrame, bc: Broadcast, interpolation: str,

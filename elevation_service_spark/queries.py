@@ -105,13 +105,11 @@ FROM h"""
 
 
 def _q_elevation(spark: SparkSession, sf_dir: str, *, encoding: str | None = None,
-                 interpolation: str = "bilinear", strategy: str = "broadcast",
-                 partition_by_key: bool | None = None) -> DataFrame:
+                 interpolation: str = "bilinear", strategy: str = "broadcast") -> DataFrame:
     pts = _derived_points(spark, sf_dir)
     enc = {t[0]: encoding for t in _TILES} if encoding else None
     tiles = fixture_tiles_df(spark, encodings=enc)
-    out = enrich_points(pts, tiles, interpolation=interpolation, strategy=strategy,
-                        partition_by_key=partition_by_key)
+    out = enrich_points(pts, tiles, interpolation=interpolation, strategy=strategy)
     return out.select("pid", "tile_key", "lat", "lon", "elevation", "status")
 
 
@@ -122,10 +120,8 @@ def q_elevation_hgt(spark, sf_dir):
 
 
 def q_elevation_terrarium(spark, sf_dir):
-    """Same pipeline with every tile stored as terrarium PNG (graft §1.5).
-    partition_by_key AUTO-engages (all-expensive working set, single-split
-    input): each worker decodes only its own tiles — decode parallelism
-    without cache duplication, no caller opt-in needed (r4)."""
+    """Same pipeline with every tile stored as terrarium PNG (graft §1.5),
+    on the same map-only plan: the PNG decodes need no tile-key shuffle."""
     return _q_elevation(spark, sf_dir, encoding="terrarium-png")
 
 

@@ -247,12 +247,11 @@ def test_fused_strategy_byte_identical_to_pipeline(spark):
 def test_fused_broadcast_guard_and_auto_routing(spark):
     """ADVICE r3: the fused form collects the WHOLE tile table (it cannot
     prune without parsing docs), so (a) strategy='auto' routes small tile
-    sets through the fused map-only plan, (b) an over-threshold table falls
-    back to the prunable pipeline instead of an unbounded driver collect,
-    and (c) a direct oversize fused call raises."""
+    sets through the fused map-only plan and (b) an over-threshold table
+    falls back to the prunable pipeline instead of an unbounded driver
+    collect."""
     import pytest
 
-    from elevation_service_spark.operators.geojson import add_elevation_docs_fused
     rows = fixtures.geojson_docs()
     docs = spark.createDataFrame(
         [(r["url"], r["geojson"]) for r in rows], ["url", "geojson"])
@@ -275,6 +274,3 @@ def test_fused_broadcast_guard_and_auto_routing(spark):
         warnings.simplefilter("error")
         add_elevation_docs(docs, tiles, strategy="auto",
                            broadcast_bytes_threshold=10)
-    # (c) direct fused call refuses an over-threshold table loudly
-    with pytest.raises(ValueError, match="broadcast threshold"):
-        add_elevation_docs_fused(docs, tiles, broadcast_bytes_threshold=10)

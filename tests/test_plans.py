@@ -185,16 +185,16 @@ def test_lat_band_partition_pruning(spark, tmp_path):
     assert df.select("tile_key").distinct().count() == 2  # N57E011, N59E179
 
 
-def test_partition_by_key_auto(spark):
-    """VERDICT r3 #4: strategy-level auto for partition_by_key — the
-    expensive-decode (terrarium PNG) working set on a few-split input gets
-    the tile-key shuffle WITHOUT caller opt-in; the cheap-decode HGT plan
-    stays map-only."""
+def test_elevation_broadcast_is_map_only_every_encoding(spark):
+    """The broadcast enrich has one plan whatever the tiles' encodings:
+    the expensive-decode (terrarium PNG) working set on a few-split input
+    stays map-only like HGT, which beat a tile-key shuffle of the points
+    at 4 cores (ARCHITECTURE.md)."""
     import __spark_entry__ as entrymod
-    terra = entrymod.queries()["elevation_terrarium"](spark, SF)
-    assert "hashpartitioning(tile_key" in plan_of(terra), plan_of(terra)
-    hgt = entrymod.queries()["elevation_hgt"](spark, SF)
-    assert "Exchange" not in plan_of(hgt), plan_of(hgt)
+    for name in ("elevation_terrarium", "elevation_hgt"):
+        plan = plan_of(entrymod.queries()[name](spark, SF))
+        assert "Exchange" not in plan, (name, plan)
+        assert "hashpartitioning(tile_key" not in plan, (name, plan)
 
 
 def test_contamination_split_filter_below_shingle_explode(spark):
