@@ -21,10 +21,11 @@ Two physical strategies, chosen for the 100 TB case:
   both sides by tile_key and run the kernel per cogroup.  The tile blob
   crosses the wire once per group — never replicated per point row (a plain
   join would glue 2.9 MB onto every point).  Every point column rides the
-  kernel exactly and its output is the result.  Optional salting splits
-  hotspot tiles (a landmark tile holding a large share of all points)
-  into ``salt_factor`` sub-groups; AQE skew-join cannot help here because
-  the skew is inside a single group, not a partition of many keys.
+  kernel exactly and its output is the result.  One per-tile probe of
+  the points names the tiles that cross (an ``isin`` on the tile scan:
+  an action runs the points' lineage once) and splits hotspot tiles into
+  sub-groups; AQE skew-join cannot help here because the skew is inside
+  a single group, not a partition of many keys.
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import kernels
-from ..functions.keys import skadi_key_col
+from ..functions.keys import skadi_key_col, valid_coord_predicate
 
 STATUS_OK = "OK"
 STATUS_OUT_OF_BOUNDS = "OUT_OF_BOUNDS"
@@ -351,17 +352,19 @@ def _adaptive_salt_map(points: DataFrame, target_points_per_group: int,
                        max_salt: int) -> dict[str, int]:
     """Per-tile salt factor proportional to the tile's point count or
     bytes, whichever splits more — the 'tile-hotspot salting' of SURVEY.md
-    §4 — for the HOT tiles only (k > 1; every other tile keeps one group).
-    The per-tile aggregation is map-side-combined and tiny (one row per
-    tile)."""
+    §4 — of every key holding an in-range point (at most 181 x 361: the
+    tiles the cogroup ships) and every hot key (k > 1).  The per-tile
+    aggregation is map-side-combined and tiny (one row per tile)."""
     row_bytes = sum((F.coalesce(F.octet_length(F.col(c).cast("string")), F.lit(0))
                      for c in points.columns), F.lit(0))
-    counts = points.groupBy("tile_key").agg(F.count(F.lit(1)).alias("n"),
-                                            F.sum(row_bytes).alias("bytes")).collect()
-    salt = {r["tile_key"]: min(max_salt, max(-(-r["n"] // target_points_per_group),
+    counts = (points.groupBy("tile_key")
+              .agg(F.count(F.lit(1)).alias("n"), F.sum(row_bytes).alias("bytes"),
+                   F.bool_or(valid_coord_predicate(F.col("lat"), F.col("lon"))).alias("ok"))
+              .filter(F.col("ok") | (F.col("n") > target_points_per_group)
+                      | (F.col("bytes") > _TARGET_GROUP_BYTES)).collect())
+    return {r["tile_key"]: min(max_salt, max(-(-r["n"] // target_points_per_group),
                                              -(-r["bytes"] // _TARGET_GROUP_BYTES)))
             for r in counts if r["tile_key"] is not None}
-    return {key: k for key, k in salt.items() if k > 1}
 
 
 def _cogroup_kernel(names: list[str], interpolation: str):
@@ -453,13 +456,14 @@ def _enrich_cogroup(points: DataFrame, tiles: DataFrame,
     tile_key) form their own group and come back OUT_OF_BOUNDS — pinned in
     test_null_coords_are_out_of_bounds_both_strategies."""
     slim, schema, restored = _pandas_transport(points)
-    tls = (tiles.join(points.select("tile_key").distinct(), "tile_key", "left_semi")
+    salt = _adaptive_salt_map(slim, target_points_per_group, max_salt)
+    tls = (tiles.filter(F.col("tile_key").isin(sorted(salt)))
            .select("tile_key", "sw_lat", "sw_lon", "encoding", "data"))
     keys = ["tile_key"]
     k_col = None
     if salt_factor is None:
         # adaptive: split only hot tiles, k ~ point count or bytes / target
-        hot = _adaptive_salt_map(slim, target_points_per_group, max_salt)
+        hot = {key: k for key, k in salt.items() if k > 1}
         if hot:
             entries = [F.lit(x) for kv in hot.items() for x in kv]
             k_col = F.coalesce(F.create_map(*entries)[F.col("tile_key")], F.lit(1))

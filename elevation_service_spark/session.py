@@ -54,6 +54,10 @@ def get_spark(app: str = "spark-elevation",
         # the generator input is trivially cheap, which none of ours are.
         .config("spark.sql.optimizer.excludedRules",
                 "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+        # no Python call-site capture on every Column/DataFrame call (about
+        # 4 py4j round trips and an IPython import attempt each); the
+        # trade-off: an error's DataFrame context loses its Python line
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.driver.memory",

@@ -89,6 +89,30 @@ def test_semi_join_prunes_tile_scan(spark):
     assert pruned.count() == 1
 
 
+def test_cogroup_enrich_scans_points_once(spark, tmp_path):
+    """The cogroup enrich prunes the tile side with its per-tile probe's
+    keys: the executed plan scans and regex-extracts the pages once (no
+    semi-join replaying their lineage) and the key filter reaches the
+    tile scan."""
+    from elevation_service_spark import fixtures
+    from elevation_service_spark.sources.tiles import read_tiles, write_tiles
+    pages, tiles = str(tmp_path / "pages"), str(tmp_path / "tiles")
+    spark.createDataFrame([(p["url"], p["text"]) for p in fixtures.pages_rows(200)[0]],
+                          "url string, text string").write.parquet(pages)
+    write_tiles(fixture_tiles_df(spark), tiles)
+    out = enrich_points(extract_coords(spark.read.parquet(pages)),
+                        read_tiles(spark, tiles), strategy="cogroup")
+    out.collect()
+    # the final adaptive plan
+    plan = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert len([s for s in scans if pages in s]) == 1, plan
+    assert plan.count("Generate") == 1, plan
+    assert "LeftSemi" not in plan, plan
+    (tile_scan,) = [s for s in scans if tiles in s]
+    assert "PushedFilters: [In(tile_key, [" in tile_scan, tile_scan
+
+
 def test_aqe_and_arrow_enabled(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"

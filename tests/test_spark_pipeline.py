@@ -416,6 +416,83 @@ def test_tile_map_cache_router_edges(spark, tmp_path, monkeypatch):
         spark.sql("DROP TABLE IF EXISTS tile_map_cache_tiles")
 
 
+def _tile_filter_literals(out) -> list[int]:
+    """The literal count of each In/InSet filter in ``out``'s optimized plan."""
+    from test_plans import _iter_logical
+    conds = [n.condition() for n in _iter_logical(out._jdf.queryExecution().optimizedPlan())
+             if n.getClass().getSimpleName() == "Filter"]
+    return [c.list().size() if c.getClass().getSimpleName() == "In" else c.hset().size()
+            for c in conds if c.getClass().getSimpleName() in ("In", "InSet")]
+
+
+def test_cogroup_probe_router_edges(spark, tmp_path, monkeypatch):
+    """The cogroup enrich's one per-tile probe names the tiles that cross
+    and each hot tile's salt factor.  Points with one distinct out-of-range
+    key each come back OUT_OF_BOUNDS, and neither the probe's collected
+    rows nor the tile filter's literals grow with them; one hot
+    out-of-range key is still salted; the empty, all-NULL and
+    all-missing-tile frames give the broadcast's rows; an explicit
+    salt_factor runs the same probe and keeps the golden elevations."""
+    write_tiles(fixture_tiles_df(spark), str(tmp_path / "tiles"))
+    tiles = read_tiles(spark, str(tmp_path / "tiles"))
+    pts, expected = _golden_points(spark)
+    in_range = {k for k, *_ in fixtures.FIXTURE_TILES} | {"N10E010"}  # + the missing tile
+    probed, probe = [], lookup._adaptive_salt_map
+    monkeypatch.setattr(lookup, "_adaptive_salt_map",
+                        lambda *a: probed.append(probe(*a)) or probed[-1])
+
+    def golden(out):
+        got = {r["pid"]: r for r in out.collect()}
+        assert all((r["elevation"], r["status"]) == expected[pid]
+                   for pid, r in got.items() if pid < len(expected))
+        return got
+
+    assert len(golden(enrich_points(pts, tiles, strategy="cogroup"))) == len(expected)
+    assert probed[-1] == dict.fromkeys(in_range, 1)
+
+    # one distinct out-of-range tile key per point
+    garbage = spark.range(5000).select(
+        (F.col("id") + len(expected)).cast("int").alias("pid"),
+        (F.col("id") % 9 + 91.5).alias("lat"), (F.floor(F.col("id") / 9) + 181.5).alias("lon"))
+    assert garbage.select(skadi_key_col(F.col("lat"), F.col("lon"))).distinct().count() == 5000
+    out = enrich_points(pts.unionByName(garbage), tiles, strategy="cogroup")
+    assert probed[-1] == dict.fromkeys(in_range, 1)
+    assert _tile_filter_literals(out) == [len(in_range)]
+    got = golden(out)
+    assert len(got) == len(expected) + 5000
+    assert {r["status"] for pid, r in got.items() if pid >= len(expected)} == {"OUT_OF_BOUNDS"}
+
+    # one hot out-of-range key, past a lowered 100-point target, is salted
+    defaults = lookup._enrich_cogroup.__defaults__
+    monkeypatch.setattr(lookup._enrich_cogroup, "__defaults__", (100, 64))
+    hot = spark.range(500).select((F.col("id") + len(expected)).cast("int").alias("pid"),
+                                  F.lit(95.5).alias("lat"), F.lit(20.5).alias("lon"))
+    out = enrich_points(pts.unionByName(hot), tiles, strategy="cogroup")
+    assert probed[-1] == {**dict.fromkeys(in_range, 1), "N95E020": 5}
+    assert "_salt" in out._jdf.queryExecution().toString()
+    got = golden(out)
+    assert {r["status"] for pid, r in got.items() if pid >= len(expected)} == {"OUT_OF_BOUNDS"}
+    monkeypatch.setattr(lookup._enrich_cogroup, "__defaults__", defaults)
+
+    # the frames with no tile to ship
+    nulls = spark.createDataFrame([(0, None, None), (1, None, 11.5), (2, 57.5, None)],
+                                  "pid int, lat double, lon double")
+    missing = pts.filter(skadi_key_col(F.col("lat"), F.col("lon")) == "N10E010")
+    for frame in (pts.limit(0), nulls, missing):
+        rows = {s: sorted(map(repr, enrich_points(frame, tiles, strategy=s).collect()))
+                for s in ("cogroup", "broadcast")}
+        assert rows["cogroup"] == rows["broadcast"]
+        assert len(rows["cogroup"]) == frame.count()
+    assert rows["cogroup"] and all("'TILE_MISSING'" in r for r in rows["cogroup"])  # missing
+
+    # an explicit salt factor: the same probe prunes, every tile splits 4 ways
+    probed.clear()
+    out = enrich_points(pts, tiles, strategy="cogroup", salt_factor=4)
+    assert len(probed) == 1 and _tile_filter_literals(out) == [len(in_range)]
+    assert "_salt" in out._jdf.queryExecution().toString()
+    assert len(golden(out)) == len(expected)
+
+
 def test_lsh_bucket_cap_bounds_pathological_bucket(spark):
     """One boilerplate bucket of m identical docs emits m(m-1)/2 candidate
     pairs uncapped; with max_bucket the oversize bucket is dropped BEFORE
